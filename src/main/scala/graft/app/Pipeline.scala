@@ -58,39 +58,43 @@ object Pipeline {
 
   /** CSV → parquet warehouse + the reference's integrity checks
     * (row counts, orphans in both directions — load_duckdb.py:98-128).
-    * Returns (rowCounts, orphanPos, orphanDeliveries).
+    * Returns (rowCounts, orphanPos, orphanDeliveries). The row counts are
+    * the ones each [[AtomicWarehouse.overwrite]] counted while writing,
+    * so no table is read back to count it; both orphan counts come from
+    * one [[SupplierDomain.orphans]] query over the published tables.
     */
   def load(spark: SparkSession, dir: String): (Map[String, Long], Long, Long) = {
     val wh = s"$dir/wh"
-    val tables = SupplierCsv.schemas.keys.map { t =>
-      val df = SupplierCsv.read(spark, s"$dir/csv/$t", t)
-      AtomicWarehouse.overwrite(df, wh, t)
-      t -> AtomicWarehouse.read(spark, wh, t).count()
+    val counts = SupplierCsv.schemas.keys.map { t =>
+      t -> AtomicWarehouse.overwrite(SupplierCsv.read(spark, s"$dir/csv/$t", t), wh, t)
     }.toMap
-    val po = AtomicWarehouse.read(spark, wh, "purchase_orders")
-    val d = AtomicWarehouse.read(spark, wh, "deliveries")
-    (tables,
-      SupplierDomain.posWithoutDelivery(po, d),
-      SupplierDomain.deliveriesWithoutPo(d, po))
+    val (orphanPos, orphanDeliveries) = SupplierDomain.orphans(
+      AtomicWarehouse.read(spark, wh, "purchase_orders"),
+      AtomicWarehouse.read(spark, wh, "deliveries"))
+    (counts, orphanPos, orphanDeliveries)
   }
 
-  /** `supplier_kpis` CTAS (compute_kpis.py). */
-  def kpis(spark: SparkSession, dir: String): DataFrame = {
+  /** `supplier_kpis` CTAS (compute_kpis.py): the published table and
+    * the number of rows published.
+    */
+  def kpis(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val wh = s"$dir/wh"
     val k = SupplierDomain.kpis(
       AtomicWarehouse.read(spark, wh, "suppliers"),
       AtomicWarehouse.read(spark, wh, "purchase_orders"),
       AtomicWarehouse.read(spark, wh, "deliveries"))
-    AtomicWarehouse.overwrite(k, wh, "supplier_kpis")
-    AtomicWarehouse.read(spark, wh, "supplier_kpis")
+    val n = AtomicWarehouse.overwrite(k, wh, "supplier_kpis")
+    (AtomicWarehouse.read(spark, wh, "supplier_kpis"), n)
   }
 
-  /** `supplier_risk_summary` CTAS (compute_risk.py). */
-  def risk(spark: SparkSession, dir: String): DataFrame = {
+  /** `supplier_risk_summary` CTAS (compute_risk.py): the published
+    * table and the number of rows published.
+    */
+  def risk(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val wh = s"$dir/wh"
     val r = SupplierDomain.risk(AtomicWarehouse.read(spark, wh, "supplier_kpis"))
-    AtomicWarehouse.overwrite(r, wh, "supplier_risk_summary")
-    AtomicWarehouse.read(spark, wh, "supplier_risk_summary")
+    val n = AtomicWarehouse.overwrite(r, wh, "supplier_risk_summary")
+    (AtomicWarehouse.read(spark, wh, "supplier_risk_summary"), n)
   }
 
   def main(args: Array[String]): Unit = {
@@ -114,10 +118,10 @@ object Pipeline {
       require(orphanPo == 0 && orphanD == 0, "referential integrity violated")
     }
     def stageKpis(): Unit = runStage("kpis") {
-      println(s"[pipeline] supplier_kpis rows=${kpis(spark, dir).count()}")
+      println(s"[pipeline] supplier_kpis rows=${kpis(spark, dir)._2}")
     }
     def stageRisk(): Unit = runStage("risk") {
-      println(s"[pipeline] supplier_risk_summary rows=${risk(spark, dir).count()}")
+      println(s"[pipeline] supplier_risk_summary rows=${risk(spark, dir)._2}")
     }
 
     stage match {

@@ -40,6 +40,34 @@ object Dashboard {
   private def tileAvg(c: String): Column =
     sum(col(c).cast(DecimalType(38, 12))).cast("double") / count(lit(1))
 
+  /** DuckDB's `round(x, digits)` on a DOUBLE: scale by 10^digits, round
+    * the scaled binary value half away from zero, scale back. Spark's
+    * `round(x, digits)` instead rounds the double's shortest decimal
+    * string half up, so it disagrees on values that print as an exact
+    * half but sit below it in binary (40101/600 prints 66.835: Spark
+    * 66.84, DuckDB 66.83). Rounding the SCALED value to an integer is
+    * exact in Spark too: n + 0.5 is itself a double, so a scaled value
+    * below it never prints as n.5.
+    */
+  def roundHalfAway(c: Column, digits: Int): Column = {
+    val scale = math.pow(10, digits)
+    round(c * scale, 0) / scale
+  }
+
+  /** Q10 — presentation rounding of the risk relation, in the oracle's
+    * (DuckDB's) rounding. The reference's pandas layer rounds half-even
+    * (dashboard/app.py:64-69) — a UI needing numpy parity applies
+    * `bround` to the unrounded q09 columns (SURVEY §2.1 Q10).
+    */
+  private def presentation(risk: DataFrame): DataFrame =
+    risk.select(col("s_suppkey"), col("s_name"),
+        roundHalfAway(col("on_time_rate") * 100, 1).as("on_time_rate_pct"),
+        roundHalfAway(col("return_rate") * 100, 1).as("return_rate_pct"),
+        roundHalfAway(col("avg_ship_delay_days"), 2).as("avg_ship_delay_days"),
+        roundHalfAway(col("performance_score"), 3).as("performance_score"),
+        roundHalfAway(col("risk_score"), 3).as("risk_score"))
+      .orderBy(desc("risk_score"), asc("s_suppkey"))
+
   /** Q9–Q15 over a materialized risk relation — the shape the reference
     * actually runs (its dashboard reads the CTAS'd `supplier_risk_summary`
     * table, not a recomputation; dashboard/app.py:41-58). Used by the
@@ -54,18 +82,7 @@ object Dashboard {
           "on_time_rate", "avg_ship_delay_days", "return_rate", "revenue",
           "n_lines", "norm_acctbal", "performance_score", "risk_score")
         .orderBy(desc("risk_score"), asc("s_suppkey")),
-      // HALF_UP `round`, deliberately: the verification contract is the
-      // DuckDB oracle (HALF_UP). The reference's pandas layer rounds
-      // half-even (dashboard/app.py:64-69) — a UI needing numpy parity
-      // applies `bround` to the unrounded q09 columns (SURVEY §2.1 Q10).
-      "q10_presentation" -> risk
-        .select(col("s_suppkey"), col("s_name"),
-          round(col("on_time_rate") * 100, 1).as("on_time_rate_pct"),
-          round(col("return_rate") * 100, 1).as("return_rate_pct"),
-          round(col("avg_ship_delay_days"), 2).as("avg_ship_delay_days"),
-          round(col("performance_score"), 3).as("performance_score"),
-          round(col("risk_score"), 3).as("risk_score"))
-        .orderBy(desc("risk_score"), asc("s_suppkey")),
+      "q10_presentation" -> presentation(risk),
       "q12_filtered_risk" -> filt
         .select("s_suppkey", "s_name", "s_nationkey", "n_lines", "risk_score")
         .orderBy("s_suppkey"),
@@ -94,17 +111,7 @@ object Dashboard {
         .orderBy(desc("risk_score"), asc("s_suppkey"))),
 
     // Q10 — presentation columns: pct + rounding (app.py:64-69).
-    // Spark `round` is HALF_UP = away-from-zero on positives, matching
-    // DuckDB's round — verified on this container (round(2.5)=3 both).
-    "q10_presentation" -> ((spark, dir) =>
-      SupplierPerf.risk(spark, dir)
-        .select(col("s_suppkey"), col("s_name"),
-          round(col("on_time_rate") * 100, 1).as("on_time_rate_pct"),
-          round(col("return_rate") * 100, 1).as("return_rate_pct"),
-          round(col("avg_ship_delay_days"), 2).as("avg_ship_delay_days"),
-          round(col("performance_score"), 3).as("performance_score"),
-          round(col("risk_score"), 3).as("risk_score"))
-        .orderBy(desc("risk_score"), asc("s_suppkey"))),
+    "q10_presentation" -> ((spark, dir) => presentation(SupplierPerf.risk(spark, dir))),
 
     // Q11 — filter domain: sorted distinct non-null values (app.py:86-87).
     "q11_filter_domains" -> ((spark, dir) =>

@@ -33,14 +33,21 @@ import graft.functions.Det._
   */
 object SupplierDomain {
 
-  /** Q2/Q3 — referential integrity: orphan counts via anti-joins
-    * (load_duckdb.py:108-124).
+  /** Q2/Q3 — referential integrity (load_duckdb.py:108-124): (POs with
+    * no delivery, deliveries with no PO), the two anti-join counts, from
+    * ONE full outer join on `po_id` and one aggregate. Each side carries
+    * a marker column; a row whose partner marker is null had no match and
+    * comes out of the outer join exactly once, null keys included (null
+    * never equals null), so duplicates count as often as the anti-joins
+    * count them.
     */
-  def posWithoutDelivery(po: DataFrame, deliveries: DataFrame): Long =
-    po.join(deliveries.select("po_id"), Seq("po_id"), "left_anti").count()
-
-  def deliveriesWithoutPo(deliveries: DataFrame, po: DataFrame): Long =
-    deliveries.join(po.select("po_id"), Seq("po_id"), "left_anti").count()
+  def orphans(po: DataFrame, deliveries: DataFrame): (Long, Long) = {
+    val r = po.select(col("po_id"), lit(true).as("is_po"))
+      .join(deliveries.select(col("po_id"), lit(true).as("is_d")), Seq("po_id"), "full_outer")
+      .agg(count(when(col("is_d").isNull, 1)), count(when(col("is_po").isNull, 1)))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** Q4 — `supplier_kpis` (compute_kpis.py:24-74). */
   def kpis(suppliers: DataFrame, po: DataFrame, deliveries: DataFrame): DataFrame = {

@@ -3,7 +3,9 @@ package graft.sources
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types._
 
 /** Atomic drop-and-recreate for warehouse tables.
   *
@@ -25,12 +27,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * complete by construction — they see the old version or the new one,
   * never a mix. The previous version is retained for in-flight readers;
   * older generations are garbage-collected on the next overwrite.
+  *
+  * A version carries its schema: `overwrite` stores it as JSON in
+  * `<version>/_schema.json` (Spark's file listing skips `_`-prefixed
+  * names) before the pointer flip, and reads hand it to
+  * `spark.read.schema`, so opening a table launches no schema-inference
+  * job. Plain directories and versions without the file are inferred as
+  * before.
   */
 object AtomicWarehouse {
 
+  private val SchemaFile = "_schema.json"
+
   private def tableDir(root: String, table: String) = new File(root, table)
 
-  /** Atomically publish `df` as the new contents of `<root>/<table>`.
+  /** Atomically publish `df` as the new contents of `<root>/<table>`;
+    * returns the number of rows published, counted by the write itself
+    * (an observed metric, no second pass over the data).
     *
     * `gcGraceMs`: superseded versions are deleted only once they are
     * both outside the newest two generations AND older than this grace
@@ -40,7 +53,7 @@ object AtomicWarehouse {
     * not count-based).
     */
   def overwrite(df: DataFrame, root: String, table: String,
-      gcGraceMs: Long = 60000L): Unit = {
+      gcGraceMs: Long = 60000L): Long = {
     val dir = tableDir(root, table)
     dir.mkdirs()
     // millis prefix makes version names lexicographically time-ordered;
@@ -54,7 +67,11 @@ object AtomicWarehouse {
       .getOrElse(0L)
     val millis = math.max(now, floor + 1)
     val version = f"v-$millis%013d-${scala.util.Random.alphanumeric.take(6).mkString}"
-    df.write.mode("overwrite").parquet(new File(dir, version).toString)
+    val versionDir = new File(dir, version)
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(versionDir.toString)
+    Files.writeString(new File(versionDir, SchemaFile).toPath, nullable(df.schema).json)
 
     val tmp = new File(dir, s"._CURRENT.$version")
     Files.writeString(tmp.toPath, version)
@@ -66,6 +83,7 @@ object AtomicWarehouse {
       .map(v => new File(dir, v))
       .filter(_.lastModified() < cutoff)
       .foreach(deleteRecursively)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** Read the current version of `<root>/<table>`. Falls back to the
@@ -73,7 +91,7 @@ object AtomicWarehouse {
     * by ordinary `.parquet(path)`), so readers work on both layouts.
     */
   def read(spark: SparkSession, root: String, table: String): DataFrame =
-    spark.read.parquet(currentPath(root, table))
+    readDir(spark, new File(currentPath(root, table)))
 
   /** TIME-TRAVEL read: the version `stepsBack` generations behind the
     * current pointer (0 = current, 1 = the previous snapshot an
@@ -91,7 +109,7 @@ object AtomicWarehouse {
     val idx = vs.indexOf(cur)
     require(idx >= 0 && idx + stepsBack < vs.length,
       s"no version $stepsBack generations behind $cur (have ${vs.length})")
-    spark.read.parquet(new File(dir, vs(idx + stepsBack)).toString)
+    readDir(spark, new File(dir, vs(idx + stepsBack)))
   }
 
   def currentPath(root: String, table: String): String = {
@@ -100,6 +118,31 @@ object AtomicWarehouse {
     if (cur.isFile)
       new File(dir, Files.readString(cur.toPath).trim).toString
     else dir.toString
+  }
+
+  /** Parquet read of one directory, with its stored schema when it has
+    * one, else inferred.
+    */
+  private def readDir(spark: SparkSession, dir: File): DataFrame = {
+    val schema = new File(dir, SchemaFile)
+    if (schema.isFile)
+      spark.read.schema(DataType.fromJson(Files.readString(schema.toPath)).asInstanceOf[StructType])
+        .parquet(dir.toString)
+    else spark.read.parquet(dir.toString)
+  }
+
+  /** The schema a parquet read infers from what `df` wrote: every field,
+    * array element and map value made nullable, at any depth (Spark's own
+    * `asNullable` is not public).
+    */
+  private def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
   }
 
   private def versionsOf(dir: File): Seq[String] =

@@ -55,9 +55,12 @@ object SupplierCsv {
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
   }
 
-  /** Write a DataFrame as a single headered CSV file tree (generator
-    * output parity, generate_data.py:190-211).
+  /** Write a DataFrame as a CSV directory: one headered part file per
+    * task, so the write and every later scan of the table run at the
+    * frame's own parallelism (the reference writes one file per table,
+    * generate_data.py:190-211; [[read]] and a glob over the directory's
+    * `.csv` files see the same rows either way).
     */
   def write(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", true).csv(path)
+    df.write.mode("overwrite").option("header", true).csv(path)
 }

@@ -1,10 +1,13 @@
 package graft.app
 
+import java.io.File
+
 import org.scalatest.funspec.AnyFunSpec
 
 import graft.TestSpark
+import graft.gen.DataGen
 import graft.operators.SupplierDomain
-import graft.sources.SupplierCsv
+import graft.sources.{AtomicWarehouse, SupplierCsv}
 
 /** Golden fidelity: run our engine's supplier-domain operators over the
   * reference's committed seed-42 CSVs and assert the exact values the
@@ -25,8 +28,7 @@ class GoldenReferenceSpec extends AnyFunSpec {
       assert(suppliers.count() == 15)
       assert(po.count() == 600)
       assert(deliveries.count() == 600)
-      assert(SupplierDomain.posWithoutDelivery(po, deliveries) == 0)
-      assert(SupplierDomain.deliveriesWithoutPo(deliveries, po) == 0)
+      assert(SupplierDomain.orphans(po, deliveries) == ((0L, 0L)))
     }
   }
 
@@ -72,25 +74,45 @@ class PipelineSpec extends AnyFunSpec {
       val (counts, orphanPo, orphanD) = Pipeline.load(spark, dir)
       assert(counts == Map("suppliers" -> 8L, "purchase_orders" -> 200L, "deliveries" -> 200L))
       assert(orphanPo == 0 && orphanD == 0)
-      val k = Pipeline.kpis(spark, dir)
-      assert(k.count() <= 8 && k.count() > 0)
-      val r = Pipeline.risk(spark, dir).collect()
+      val (k, nK) = Pipeline.kpis(spark, dir)
+      assert(nK <= 8 && nK > 0 && k.count() == nK)
+      val (risk, nR) = Pipeline.risk(spark, dir)
+      val r = risk.collect()
+      assert(r.length == nR)
       r.foreach { row =>
         val risk = row.getAs[Double]("risk_score")
         assert(risk >= 0.0 && risk <= 1.0)
       }
     }
 
+    it("hands off each table as several CSV part files") {
+      for (t <- SupplierCsv.schemas.keys) {
+        val parts = new File(s"$dir/csv/$t").listFiles().count(_.getName.endsWith(".csv"))
+        assert(parts > 1, s"$t: $parts CSV part file(s)")
+      }
+    }
+
+    it("publishes the risk table SupplierDomain computes over the in-memory frames") {
+      val s = DataGen.suppliers(spark, 8, 7L)
+      val po = DataGen.purchaseOrders(spark, 200, 8, 7L)
+      val expected = SupplierDomain.risk(SupplierDomain.kpis(s, po, DataGen.deliveries(po, s, 7L)))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().sortBy(_.getAs[String]("supplier_id")).toSeq
+      val published = AtomicWarehouse.read(spark, s"$dir/wh", "supplier_risk_summary")
+      assert(published.schema.map(f => f.name -> f.dataType) ==
+        expected.schema.map(f => f.name -> f.dataType))
+      assert(rows(published) == rows(expected))
+    }
+
     it("is idempotent: rerunning a stage overwrites cleanly") {
-      val k1 = Pipeline.kpis(spark, dir).collect().map(_.toString).sorted
-      val k2 = Pipeline.kpis(spark, dir).collect().map(_.toString).sorted
+      val k1 = Pipeline.kpis(spark, dir)._1.collect().map(_.toString).sorted
+      val k2 = Pipeline.kpis(spark, dir)._1.collect().map(_.toString).sorted
       assert(k1.toSeq == k2.toSeq)
     }
   }
 
   describe("restart + retry contract (the reference's retries=2 scheduling)") {
     it("a mid-pipeline stage failure resumes without rebuilding completed stages") {
-      import graft.sources.AtomicWarehouse
       val d = "/dev/shm/graft-test-pipeline-resume"
       Pipeline.generate(spark, d, nSuppliers = 6, nPos = 120, seed = 11L)
       Pipeline.load(spark, d)
@@ -114,8 +136,8 @@ class PipelineSpec extends AnyFunSpec {
       assert(vers == before, "a downstream failure must not touch upstream outputs")
       // ...and the resumed run needs ONLY the failed stage: it reads
       // load's published tables and succeeds
-      val k = Pipeline.kpis(spark, d)
-      assert(k.count() > 0)
+      val (_, k) = Pipeline.kpis(spark, d)
+      assert(k > 0)
       assert(vers == before, "resuming kpis must not republish load's tables")
     }
 
@@ -128,7 +150,6 @@ class PipelineSpec extends AnyFunSpec {
     }
 
     it("a failed publish attempt leaves the previous version visible to readers") {
-      import graft.sources.AtomicWarehouse
       import org.apache.spark.sql.functions._
       val d = "/dev/shm/graft-test-pipeline-resume"
       // kpis published above; a rerun attempt that crashes BEFORE its

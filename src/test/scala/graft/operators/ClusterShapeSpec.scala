@@ -77,28 +77,12 @@ class ClusterShapeSpec extends AnyFunSpec {
     }
 
     it("job structure is parallelism-invariant for the iterative pins") {
-      def jobsOf(tag: String)(f: => Unit): Int = {
-        val sc = spark.sparkContext
-        sc.setJobGroup(tag, tag, interruptOnCancel = false)
-        try f
-        finally sc.clearJobGroup()
-        var last = -1
-        var cur = sc.statusTracker.getJobIdsForGroup(tag).length
-        var spins = 0
-        while (cur != last && spins < 50) {
-          last = cur
-          Thread.sleep(100)
-          cur = sc.statusTracker.getJobIdsForGroup(tag).length
-          spins += 1
-        }
-        cur
-      }
       // the JobCountSpec pins, re-asserted at 200 shuffle partitions
       val pins = Seq("q103_item_pagerank" -> 28, "q110_item_triangles" -> 16,
         "q140_label_communities" -> 30, "q109_session_overlap" -> 8)
       withClusterShape(forceDimFallback = false) {
         pins.foreach { case (name, expected) =>
-          def once(tag: String): Int = jobsOf(tag) {
+          def once(tag: String): Int = TestSpark.jobsOf(tag) {
             SparkEntry.queries(name)(spark, sf)
               .write.format("noop").mode("overwrite").save()
           }

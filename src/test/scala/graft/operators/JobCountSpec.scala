@@ -24,27 +24,6 @@ class JobCountSpec extends AnyFunSpec {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf
 
-  /** Jobs launched by `f`, isolated via a job group; the status
-    * tracker is fed asynchronously off the listener bus, so poll
-    * until the count is stable.
-    */
-  private def jobsOf(tag: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(tag, tag, interruptOnCancel = false)
-    try f
-    finally sc.clearJobGroup()
-    var last = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(tag).length
-    var spins = 0
-    while (cur != last && spins < 50) {
-      last = cur
-      Thread.sleep(100)
-      cur = sc.statusTracker.getJobIdsForGroup(tag).length
-      spins += 1
-    }
-    cur
-  }
-
   /** Count the STEADY-STATE job structure: one untimed warm-up run
     * absorbs whatever one-time session/layout materialization work is
     * still pending (which otherwise makes the count depend on suite
@@ -52,7 +31,7 @@ class JobCountSpec extends AnyFunSpec {
     * not), then the second run's count is pinned.
     */
   private def run(name: String): Int = {
-    def once(tag: String): Int = jobsOf(tag) {
+    def once(tag: String): Int = TestSpark.jobsOf(tag) {
       SparkEntry.queries(name)(spark, sf)
         .write.format("noop").mode("overwrite").save()
     }

@@ -59,4 +59,59 @@ class AtomicWarehouseSpec extends AnyFunSpec {
       assert(AtomicWarehouse.read(spark, root, "plain").count() == 200)
     }
   }
+
+  describe("a version carries its schema") {
+    /** Non-nullable, nested struct, array and map columns. */
+    def nested = spark.range(0, 50).select(
+      col("id"),
+      struct(col("id").as("a"), lit("x").as("b"), array(lit(1), lit(2)).as("c")).as("s"),
+      array(col("id"), lit(7L)).as("arr"),
+      array(struct(col("id").as("x"))).as("arr_s"),
+      map(lit("k"), struct(col("id").as("y"))).as("m"))
+
+    lazy val tables: Seq[(String, String)] = {
+      val dag = s"$root/dag"
+      graft.app.Pipeline.generate(spark, dag, nSuppliers = 6, nPos = 60, seed = 3L)
+      graft.app.Pipeline.load(spark, dag)
+      graft.app.Pipeline.kpis(spark, dag)
+      graft.app.Pipeline.risk(spark, dag)
+      AtomicWarehouse.overwrite(nested, root, "nested")
+      Seq("suppliers", "purchase_orders", "deliveries", "supplier_kpis",
+        "supplier_risk_summary").map(s"$dag/wh" -> _) :+ (root -> "nested")
+    }
+
+    it("reads back exactly the schema inference gives, nested and non-nullable columns included") {
+      assert(nested.schema("id").nullable == false, "fixture lost its non-nullable column")
+      for ((wh, t) <- tables)
+        assert(AtomicWarehouse.read(spark, wh, t).schema ==
+          spark.read.parquet(AtomicWarehouse.currentPath(wh, t)).schema, t)
+    }
+
+    it("opens a table without launching a job") {
+      for ((wh, t) <- tables)
+        assert(TestSpark.jobsOf(s"aw-read-$t")(AtomicWarehouse.read(spark, wh, t)) == 0, t)
+      // the probe is live: the inference path does launch a job
+      assert(TestSpark.jobsOf("aw-infer")(spark.read.parquet(
+        AtomicWarehouse.currentPath(root, "nested"))) > 0)
+    }
+
+    it("still reads a version directory without the schema file") {
+      AtomicWarehouse.overwrite(nested, root, "noschema")
+      val before = AtomicWarehouse.read(spark, root, "noschema")
+      val rows = before.orderBy("id").collect().toSeq
+      assert(new File(AtomicWarehouse.currentPath(root, "noschema"), "_schema.json").delete())
+      val after = AtomicWarehouse.read(spark, root, "noschema")
+      assert(after.schema == before.schema)
+      assert(after.orderBy("id").collect().toSeq == rows)
+    }
+
+    it("returns the number of rows it published") {
+      val frames = Seq("all" -> snapshot(1), "some" -> snapshot(2).filter(col("id") % 3 === 0),
+        "none" -> snapshot(3).filter(col("id") < 0), "nested" -> nested)
+      for ((t, df) <- frames) {
+        val n = AtomicWarehouse.overwrite(df, s"$root/counts", t)
+        assert(n == AtomicWarehouse.read(spark, s"$root/counts", t).count(), t)
+      }
+    }
+  }
 }
