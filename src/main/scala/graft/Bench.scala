@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.{Analytics, Curation, Dashboard, Dedup, Events, Html, Integrity, Multimodal, Similarity, SupplierPerf, TextAnalysis}
 import graft.sources.Tables
 
@@ -14,36 +12,25 @@ import graft.sources.Tables
   *
   * Prints one JSON line: headline `value` = wall-clock of the full
   * pipeline (all stages + all queries, excluding JVM/session startup,
-  * which is reported separately as `startup_sec`).
+  * which is reported separately on stderr as `startup_sec`).
   */
 object Bench {
+  /** Where the run log (`bench_runs.md`) and QProf's plan dumps go:
+    * SPARK_GRAFT_BENCH_LOG_DIR, default plans/r13.
+    */
+  def logDir: java.nio.file.Path =
+    java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_LOG_DIR", "plans/r13"))
+
   def main(args: Array[String]): Unit = {
     val t00 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.defaultCores
     // Bench CTAS tables are throwaway: keep them on tmpfs, off the (slow,
     // stall-prone on this VM) virtio disk, like the shuffle scratch.
     val wh = "/dev/shm/graft-bench-wh"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .config("spark.sql.warehouse.dir", "/dev/shm/graft-wh")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The drained fixture streams carry model-scale state (thousands of
-    // keys): the StreamProfile sweep measured the HDFS provider at 2
-    // state partitions ~20% faster per drain than the RocksDB@4 default
-    // at this volume. Setting the per-stream sizing confs here is the
-    // dial the drain docstring prescribes — production-scale state
-    // keeps the RocksDB default.
-    spark.conf.set(graft.streaming.EventStream.StateProviderConf,
-      graft.streaming.EventStream.HdfsStateProvider)
-    spark.conf.set(graft.streaming.EventStream.StatePartitionsConf, "2")
+    // the drained fixture streams run on the session's HDFS@2 state
+    // dial (see graft.Session; OPTIMIZATION_r12.md)
+    val spark = Session.local(cpus)
     val startup = (System.nanoTime() - t00) / 1e9
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -130,9 +117,7 @@ object Bench {
     // written $wh/risk (tmpfs, empty on a fresh host) and crash. Drift
     // against the map's real key set is asserted after the passes, once
     // riskT exists.
-    val dashFromRisk = Seq("q09_dashboard_base", "q10_presentation",
-      "q12_filtered_risk", "q13_kpi_tiles", "q14_topn_risk", "q15_drilldown")
-    dashFromRisk.foreach { name =>
+    Dashboard.RiskViews.foreach { name =>
       run(name) { Dashboard.queriesFromRisk(riskT)(name) }
     }
     run("q11_filter_domains") { Dashboard.queries("q11_filter_domains")(spark, sfDir) }
@@ -394,8 +379,8 @@ object Bench {
     // a query added to queriesFromRisk but not the list would otherwise
     // silently vanish from the benchmark
     val fromRiskKeys = Dashboard.queriesFromRisk(riskT).keySet
-    require(dashFromRisk.toSet == fromRiskKeys,
-      s"dashboard stage drift: listed=${dashFromRisk.sorted} map=${fromRiskKeys.toSeq.sorted}")
+    require(Dashboard.RiskViews.toSet == fromRiskKeys,
+      s"dashboard stage drift: listed=${Dashboard.RiskViews.sorted} map=${fromRiskKeys.toSeq.sorted}")
 
     val total = results.values.sum
     def jmap(m: scala.collection.Map[String, Double]): String =
@@ -409,13 +394,14 @@ object Bench {
     System.err.println(s"""[bench] gc_sec ${jmap(gcShare)}""")
     System.err.println(s"""[bench] full_names ${jmap(results)}""")
     System.err.println("[bench] methodology: staged pipeline (kpis/risk/candidates materialized once), 2 full suite passes, per-query min; see SURVEY.md 6.1")
+    System.err.println(f"[bench] startup_sec=$startup%.3f wall_sec=$wall%.3f cpus=$cpus")
     // basename only: the full path costs ~16 chars of the driver's
     // 2000-char stdout-tail budget that the growing per-query map needs
     val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    // The degradation ladder (precision → extras → slowest-K map with
-    // the pass/GC/heap trio always intact) lives in BenchLine so
-    // BenchLineSpec can pin it at 200-query scale without a Spark run.
-    val line = BenchLine.render(total, results.toSeq, sfName, startup, cpus,
+    // The slowest-K map with the pass/GC/heap trio always intact lives
+    // in BenchLine so BenchLineSpec can pin it at 200-query scale
+    // without a Spark run.
+    val line = BenchLine.render(total, results.toSeq, sfName, startup, cpus.toString,
       wall, passSec.toSeq, passGc.toSeq, heapPeakMb, coreMin, coreMed)
     println(line)
     // Self-persist the FULL per-query map (r12 verdict item: the 1860-char
@@ -424,9 +410,7 @@ object Bench {
     // Appended by the run itself; best-effort (a read-only checkout must
     // never fail the bench).
     try {
-      val dir = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_LOG_DIR", "plans/r13"))
-      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.createDirectories(logDir)
       val stamp = java.time.format.DateTimeFormatter
         .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
         .format(java.time.Instant.now())
@@ -434,7 +418,7 @@ object Bench {
       block ++= s"## bench $stamp sf=$sfName cpus=$cpus\n```\n$line\n"
       block ++= s"""full_names ${jmap(results)}\n"""
       block ++= s"""gc_sec ${jmap(gcShare)}\n```\n"""
-      java.nio.file.Files.writeString(dir.resolve("bench_runs.md"), block.toString,
+      java.nio.file.Files.writeString(logDir.resolve("bench_runs.md"), block.toString,
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] bench_runs.md persist skipped: $e")

@@ -10,22 +10,15 @@ package graft
   * the old 1700 cap silently shed the whole per-query map at 158
   * queries).
   *
-  * Degradation ladder (first fitting rung wins):
-  *  1. full 2-dp map + startup/cpus/wall + the telemetry trio
-  *  2. adaptive map (sub-second queries keep 2 dp, the rest 1 dp)
-  *  3. 1-dp map + full extras
-  *  4. 1-dp map + the trio at 1 dp
-  *  5. 1-dp map + the trio at 0 dp
-  *  6. TERMINAL: the slowest-K queries (K maximal to fit) + one
-  *     `rest_n`/`rest_sec` aggregate for the shed fast tail + the trio
-  *     at 0 dp. This rung fits ANY catalog size, so the diagnostic
-  *     trio (pass_sec / gc_sec / peak_mb — what distinguishes host
-  *     noise from engine regressions in the recorded JSON) is never
-  *     shed again: by r8 the catalog had outgrown every trio-bearing
-  *     rung and both recorded scales were already down to the bare
-  *     map. The shed entries are exactly the fastest — the ones whose
-  *     1-dp value (0.1–0.5 s) carries the least regression signal —
-  *     and their count+sum survive in the aggregate.
+  * The line carries the slowest-K queries (K maximal to fit), one
+  * `rest_n`/`rest_sec` aggregate for the shed fast tail, and the
+  * diagnostic trio at 0 dp (pass_sec / gc_sec / peak_mb — what
+  * distinguishes host noise from engine regressions in the recorded
+  * JSON). This fits ANY catalog size. The shed entries are exactly the
+  * fastest — the ones whose 1-dp value carries the least regression
+  * signal — and their count+sum survive in the aggregate. A full map
+  * with startup/cpus/wall extras is not offered: the 258-query
+  * catalog cannot fit one under the cap.
   */
 object BenchLine {
   /** Hard line cap — see the calibration note above. */
@@ -51,17 +44,14 @@ object BenchLine {
     m.map { case (k, v) => "\"" + k + "\":" + fN(v, dp) }
       .mkString("{", ",", "}")
 
-  private def jmapA(m: collection.Seq[(String, Double)]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + fN(v, if (v < 1) 2 else 1) }
-      .mkString("{", ",", "}")
-
   private def jarr(vs: collection.Seq[Double], dp: Int): String =
     vs.map(fN(_, dp)).mkString("[", ",", "]")
 
   /** Build the line from full-name suite results (insertion order).
     * Keys shorten to their unambiguous `qNN` prefix with leading zeros
     * stripped ("q01_row_counts" → "q1", the driver-contract example
-    * format); full names go to stderr by the caller.
+    * format); full names go to stderr by the caller. `startup`, `cpus`
+    * and `wall` do not fit on the line; the caller logs them.
     */
   def render(
       total: Double,
@@ -80,57 +70,41 @@ object BenchLine {
     require(short.map(_._1).distinct.size == short.size,
       s"qNN prefixes must stay unique (${results.size} -> " +
         s"${short.map(_._1).distinct.size})")
-    val coreExtras =
-      s""","pass_sec":${jarr(passSec, 1)},"gc_sec":${jarr(passGc, 1)}""" +
-        s""","peak_mb":$peakMb"""
-    val coarseExtras =
+    val trio =
       s""","pass_sec":${jarr(passSec, 0)},"gc_sec":${jarr(passGc, 0)}""" +
         s""","peak_mb":$peakMb"""
-    val extras =
-      s""","startup_sec":${f3(startup)},"cpus":$cpus,"wall_sec":${f3(wall)}""" +
-        coreExtras
     // core_min_sec / core_med_sec (Σ per-query min / median over the
-    // 3 interleaved core passes) ride the FIXED part of every rung:
-    // they are the stable round-over-round core signal and must never
-    // be shed by the degradation ladder
+    // 3 interleaved core passes) ride the fixed part of the line:
+    // they are the stable round-over-round core signal and are never
+    // shed
     val core =
       if (coreMin < 0) ""
       else s""","core_min_sec":${fN(coreMin, 2)},"core_med_sec":${fN(coreMed, 2)}"""
     def jline(queries: String, tail: String): String =
       s"""{"metric":"pipeline_total","value":${f3(total)},"unit":"sec"""" +
         s""","queries":$queries,"sf":"$sfName"$core$tail}"""
-    Seq(
-      jline(jmapN(short, 2), extras),
-      jline(jmapA(short), extras),
-      jline(jmapN(short, 1), extras),
-      jline(jmapN(short, 1), coreExtras),
-      jline(jmapN(short, 1), coarseExtras))
-      .find(_.length <= MaxLen)
-      .getOrElse {
-        // terminal rung: slowest-K, ordered slowest-first (value desc,
-        // key asc tiebreak for determinism)
-        val desc = short.sortBy { case (k, v) => (-v, k) }
-        def lineFor(k: Int): String = {
-          val rest = desc.drop(k)
-          val tail =
-            (if (rest.isEmpty) ""
-             else s""","rest_n":${rest.size},"rest_sec":${
-               fN(rest.map(_._2).sum, 1)}""") + coarseExtras
-          jline(jmapN(desc.take(k), 1), tail)
-        }
-        // binary-search the largest fitting K (length is monotone in K
-        // up to ±a digit of the shrinking rest_sec, so a short linear
-        // fix-up after the search keeps the result exact without the
-        // O(n²) full-line rebuild per step at 200 queries)
-        var lo = 0
-        var hi = desc.size
-        while (lo < hi) { // invariant: lineFor(lo) fits
-          val mid = lo + (hi - lo + 1) / 2
-          if (lineFor(mid).length <= MaxLen) lo = mid else hi = mid - 1
-        }
-        while (lo < desc.size && lineFor(lo + 1).length <= MaxLen) lo += 1
-        while (lo > 0 && lineFor(lo).length > MaxLen) lo -= 1
-        lineFor(lo)
-      }
+    // slowest-first (value desc, key asc tiebreak for determinism)
+    val desc = short.sortBy { case (k, v) => (-v, k) }
+    def lineFor(k: Int): String = {
+      val rest = desc.drop(k)
+      val tail =
+        (if (rest.isEmpty) ""
+         else s""","rest_n":${rest.size},"rest_sec":${
+           fN(rest.map(_._2).sum, 1)}""") + trio
+      jline(jmapN(desc.take(k), 1), tail)
+    }
+    // binary-search the largest fitting K (length is monotone in K
+    // up to ±a digit of the shrinking rest_sec, so a short linear
+    // fix-up after the search keeps the result exact without the
+    // O(n²) full-line rebuild per step at 200 queries)
+    var lo = 0
+    var hi = desc.size
+    while (lo < hi) { // invariant: lineFor(lo) fits
+      val mid = lo + (hi - lo + 1) / 2
+      if (lineFor(mid).length <= MaxLen) lo = mid else hi = mid - 1
+    }
+    while (lo < desc.size && lineFor(lo + 1).length <= MaxLen) lo += 1
+    while (lo > 0 && lineFor(lo).length > MaxLen) lo -= 1
+    lineFor(lo)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries to PLANS.md —
   * reviewable evidence of scan pruning, pushdown, and join strategy
   * without rerunning the engine.
@@ -12,15 +10,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .config("spark.sql.warehouse.dir", "/dev/shm/graft-wh")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
 
     val headline = Seq(
       "q04_supplier_kpis", "q07_supplier_risk", "q12_filtered_risk",

@@ -2,81 +2,89 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** Dev-only per-query profiler for the optimization rounds (guide §1):
-  * mirrors Bench's session config, times each named query in isolation
-  * through the noop sink (so the computation is measured, not the
-  * sink), labels jobs, and optionally dumps `explain("formatted")` to
-  * `plans/r13/<name>_<tag>.txt`.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** Dev-only per-query profiler on the `graft.Session` shape: times each
+  * named query in isolation through the noop sink (so the computation
+  * is measured, not the sink), labels jobs, prints one line per stage
+  * over 0.1 s and one line per streaming micro-batch, and optionally
+  * dumps `explain("formatted")` to `<log dir>/<name>_<tag>.txt`.
+  * A failing query prints its error and the run goes on.
   *
   * Usage: runMain graft.QProf q230_ppjoin_pairs,q140_label_communities [tag]
+  *   `all` names every `SparkEntry.queries` key;
   *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
-  *   tag != "-" writes plan files under plans/r13/.
-  *   SPARK_GRAFT_QPROF_RUNS (default 2) timed noop runs per query.
+  *   tag != "-" writes plan files under Bench's log dir
+  *   (SPARK_GRAFT_BENCH_LOG_DIR, default plans/r13);
+  *   SPARK_GRAFT_QPROF_RUNS (default 2) timed noop runs per query;
+  *   SPARK_GRAFT_QPROF_CONF="k=v;k2=v2" extra session confs.
   */
 object QProf {
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.getOrElse("q230_ppjoin_pairs").split(',').toSeq
+    val names = args.headOption.getOrElse("q230_ppjoin_pairs") match {
+      case "all" => SparkEntry.queries.keys.toSeq.sorted
+      case list => list.split(',').toSeq
+    }
     val tag = if (args.length > 1) args(1) else "-"
     val runs = sys.env.getOrElse("SPARK_GRAFT_QPROF_RUNS", "2").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .config("spark.sql.warehouse.dir", "/dev/shm/graft-wh")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set(graft.streaming.EventStream.StateProviderConf,
-      graft.streaming.EventStream.HdfsStateProvider)
-    spark.conf.set(graft.streaming.EventStream.StatePartitionsConf, "2")
-    // extra session confs: SPARK_GRAFT_QPROF_CONF="k=v;k2=v2"
+    val spark = Session.local()
     sys.env.get("SPARK_GRAFT_QPROF_CONF").foreach(_.split(';').filter(_.nonEmpty)
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    // SPARK_GRAFT_QPROF_STAGES=1: per-stage wall/exec/cpu accounting so
-    // query time attributes to stages (r13 addition — the q136 JIT
-    // diagnosis needed it)
-    if (sys.env.get("SPARK_GRAFT_QPROF_STAGES").contains("1"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val wall = (for {s <- si.submissionTime; c <- si.completionTime}
-              yield (c - s) / 1e3).getOrElse(-1.0)
-            if (wall > 0.1)
-              println(f"[qstage] id=${si.stageId} tasks=${si.numTasks} " +
-                f"wall=$wall%.2f exec=${si.taskMetrics.executorRunTime / 1e3}%.2f " +
-                f"cpu=${si.taskMetrics.executorCpuTime / 1e9}%.2f " +
-                f"details=${si.details.linesIterator.drop(1)
-                  .find(l => l.contains("graft") && !l.contains("QProf"))
-                  .getOrElse("").trim.take(80)}")
-          }
-        })
+    // per-stage wall/exec/cpu, so query time attributes to stages
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        val wall = (for {s <- si.submissionTime; c <- si.completionTime}
+          yield (c - s) / 1e3).getOrElse(-1.0)
+        if (wall > 0.1)
+          println(f"[qstage] id=${si.stageId} tasks=${si.numTasks} " +
+            f"wall=$wall%.2f exec=${si.taskMetrics.executorRunTime / 1e3}%.2f " +
+            f"cpu=${si.taskMetrics.executorCpuTime / 1e9}%.2f " +
+            f"details=${si.details.linesIterator.drop(1)
+              .find(l => l.contains("graft") && !l.contains("QProf"))
+              .getOrElse("").trim.take(80)}")
+      }
+    })
+    // per-micro-batch durationMs of the drained streams, largest first
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val d = p.durationMs.asScala.toSeq.sortBy(-_._2)
+          .map { case (k, v) => s"$k=$v" }.mkString(" ")
+        println(s"[qbatch] ${p.name} batch=${p.batchId} rows=${p.numInputRows} $d")
+      }
+    })
 
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      if (tag != "-") {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.createDirectories(Paths.get("plans/r13"))
-        Files.writeString(Paths.get(s"plans/r13/${name}_$tag.txt"), txt)
-      }
-      (1 to runs).foreach { i =>
-        spark.sparkContext.setJobDescription(s"$name run $i")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[qprof] $name run$i $dt%.2f s")
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+      try {
+        val fn = SparkEntry.queries(name)
+        if (tag != "-") {
+          val txt = fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          Files.createDirectories(Bench.logDir)
+          Files.writeString(Bench.logDir.resolve(s"${name}_$tag.txt"), txt)
+        }
+        (1 to runs).foreach { i =>
+          spark.sparkContext.setJobDescription(s"$name run $i")
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          println(f"[qprof] $name run$i $dt%.2f s")
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(_.unpersist(blocking = false))
+        }
+      } catch {
+        case NonFatal(e) =>
+          println(s"[qprof] $name ERROR ${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("").take(200))
       }
     }
     spark.stop()

@@ -59,22 +59,11 @@ object ScaleCurve {
     "q230_ppjoin_pairs", "q238_hamming_pairs")
 
   private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the q238 wide-signature dial: the 32-bit gate geometry
-      // saturates its 256-bucket slices around 10^5 docs; the curve's
-      // arms run the documented scale path (60-bit / 15-bit slices)
-      .config(graft.operators.Dedup.HamBitsConf, "60")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .config("spark.sql.warehouse.dir", "/dev/shm/graft-wh")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set(graft.streaming.EventStream.StateProviderConf,
-      graft.streaming.EventStream.HdfsStateProvider)
-    spark.conf.set(graft.streaming.EventStream.StatePartitionsConf, "2")
+    val spark = Session.local(32)
+    // the q238 wide-signature dial: the 32-bit gate geometry
+    // saturates its 256-bucket slices around 10^5 docs; the curve's
+    // arms run the documented scale path (60-bit / 15-bit slices)
+    spark.conf.set(graft.operators.Dedup.HamBitsConf, "60")
     spark
   }
 

@@ -19,15 +19,7 @@ object ScaleSmoke {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val sf = "/root/testdata/sf0.1"
     val wh = "/dev/shm/graft-scale-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .config("spark.sql.warehouse.dir", "/dev/shm/graft-wh")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32)
 
     def replicate(df: DataFrame, idCol: String, out: String): DataFrame = {
       val ids = spark.range(mult).select(col("id").as("__rep"))

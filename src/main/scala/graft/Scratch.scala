@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only contract probe (not part of the driver contract): smoke the
   * flagship entry and check queries↔oracleSql key parity. The verify
   * workflow invokes this — keep this shape stable.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
     val e = SparkEntry.entry(spark)
     println(s"[probe] entry rows=${e.count()} cols=${e.columns.length}")
     val qk = SparkEntry.queries.keySet

@@ -165,14 +165,7 @@ object CorpusPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/dev/shm/graft-corpus-out"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(8)
     val r = run(spark, sfDir, outDir)
     println(s"[corpus] input=${r.n_input} lang=${r.n_lang_kept} " +
       s"quality=${r.n_quality_kept} exact=${r.n_after_exact} " +

@@ -100,14 +100,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/pipeline")
     val stage = if (args.length > 1) args(1) else "all"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-scratch")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def stageGenerate(): Unit = runStage("generate") {
       generate(spark, dir); println(s"[pipeline] generated → $dir/csv")

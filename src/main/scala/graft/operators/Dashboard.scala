@@ -22,11 +22,6 @@ object Dashboard {
   val NLinesLo = 400
   val NLinesHi = 800
 
-  private def filtered(spark: SparkSession, dir: String): DataFrame =
-    SupplierPerf.risk(spark, dir)
-      .filter(col("s_nationkey") === FilterNation &&
-        col("n_lines").between(NLinesLo, NLinesHi))
-
   private val filteredSql: String =
     s"""${SupplierPerf.riskSql},
        | filtered AS (
@@ -71,7 +66,8 @@ object Dashboard {
   /** Q9–Q15 over a materialized risk relation — the shape the reference
     * actually runs (its dashboard reads the CTAS'd `supplier_risk_summary`
     * table, not a recomputation; dashboard/app.py:41-58). Used by the
-    * staged Bench pipeline.
+    * staged Bench pipeline and, over a recomputed risk relation, by
+    * [[queries]]. Its key set is [[RiskViews]].
     */
   def queriesFromRisk(risk: DataFrame): Map[String, DataFrame] = {
     val filt = risk.filter(col("s_nationkey") === FilterNation &&
@@ -101,55 +97,27 @@ object Dashboard {
         .limit(1))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Q9 — dashboard base projection, risk-ranked (app.py:41-58).
-    "q09_dashboard_base" -> ((spark, dir) =>
-      SupplierPerf.risk(spark, dir)
-        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal",
-          "on_time_rate", "avg_ship_delay_days", "return_rate", "revenue",
-          "n_lines", "norm_acctbal", "performance_score", "risk_score")
-        .orderBy(desc("risk_score"), asc("s_suppkey"))),
+  /** The views [[queriesFromRisk]] derives from the risk relation. */
+  val RiskViews: Seq[String] = Seq("q09_dashboard_base", "q10_presentation",
+    "q12_filtered_risk", "q13_kpi_tiles", "q14_topn_risk", "q15_drilldown")
 
-    // Q10 — presentation columns: pct + rounding (app.py:64-69).
-    "q10_presentation" -> ((spark, dir) => presentation(SupplierPerf.risk(spark, dir))),
+  /** Q9–Q16 over the base tables: the risk-fed views recompute the
+    * risk relation and read it through [[queriesFromRisk]].
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    RiskViews.map { name =>
+      name -> ((spark: SparkSession, dir: String) =>
+        queriesFromRisk(SupplierPerf.risk(spark, dir))(name))
+    }.toMap ++ Map(
+      // Q11 — filter domain: sorted distinct non-null values (app.py:86-87).
+      "q11_filter_domains" -> ((spark: SparkSession, dir: String) =>
+        Tables.orders(spark, dir)
+          .select("o_orderpriority").na.drop().distinct()
+          .orderBy("o_orderpriority")),
 
-    // Q11 — filter domain: sorted distinct non-null values (app.py:86-87).
-    "q11_filter_domains" -> ((spark, dir) =>
-      Tables.orders(spark, dir)
-        .select("o_orderpriority").na.drop().distinct()
-        .orderBy("o_orderpriority")),
-
-    // Q12 — filtered risk slice (app.py:98-103).
-    "q12_filtered_risk" -> ((spark, dir) =>
-      filtered(spark, dir)
-        .select("s_suppkey", "s_name", "s_nationkey", "n_lines", "risk_score")
-        .orderBy("s_suppkey")),
-
-    // Q13 — KPI tiles over the filtered slice (app.py:107-111).
-    "q13_kpi_tiles" -> ((spark, dir) =>
-      filtered(spark, dir).agg(
-        count(lit(1)).as("n_suppliers"),
-        tileAvg("risk_score").as("avg_risk"),
-        (tileAvg("on_time_rate") * 100).as("avg_on_time_pct"),
-        (tileAvg("return_rate") * 100).as("avg_return_pct"))),
-
-    // Q14 — top-N by risk over the filtered slice (app.py:149).
-    "q14_topn_risk" -> ((spark, dir) =>
-      filtered(spark, dir)
-        .select("s_suppkey", "s_name", "risk_score", "performance_score")
-        .orderBy(desc("risk_score"), asc("s_suppkey"))
-        .limit(10)),
-
-    // Q15 — drill-down: the row for one selected supplier (app.py:172-173).
-    "q15_drilldown" -> ((spark, dir) =>
-      SupplierPerf.risk(spark, dir)
-        .filter(col("s_name") === "Supplier#000000003")
-        .orderBy("s_suppkey")
-        .limit(1)),
-
-    // Q16 — table viewer: SELECT * FROM t LIMIT n (app.py:204-212).
-    "q16_table_viewer" -> ((spark, dir) =>
-      Tables.nation(spark, dir).orderBy("n_nationkey").limit(20)))
+      // Q16 — table viewer: SELECT * FROM t LIMIT n (app.py:204-212).
+      "q16_table_viewer" -> ((spark: SparkSession, dir: String) =>
+        Tables.nation(spark, dir).orderBy("n_nationkey").limit(20)))
 
   val oracle: Map[String, String] = Map(
     "q09_dashboard_base" ->

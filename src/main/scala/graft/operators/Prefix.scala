@@ -35,13 +35,11 @@ object Prefix {
   /** Fine value-range buckets per unit of parallelism — the q63
     * balance-granularity dial: a value cluster narrower than
     * span/(64·p) still lands in one bucket; wider clustering spreads.
-    * Conf-tunable (`spark.graft.prefix.fineBucketsPerCore`) so cluster
-    * deployments can trade bucket balance against the size of the
-    * collected offset relation (O(groups × buckets)); the default is
-    * the value every gated consumer was verified at.
+    * More buckets buy balance at the price of a larger collected
+    * offset relation (O(groups × buckets)); 64 is the value every
+    * gated consumer was verified at.
     */
   val FineBucketsPerCore = 64L
-  val FineBucketsConf = "spark.graft.prefix.fineBucketsPerCore"
 
   /** Adds the INCLUSIVE running sum of each `cntCols(i)` (a long
     * counter column) over ascending `orderCol` as `outCols(i)` —
@@ -88,8 +86,7 @@ object Prefix {
     require(BigInt(hi) - BigInt(lo) < BigInt(Long.MaxValue),
       s"key span [$lo, $hi] overflows the fine-bucket arithmetic")
     val p = math.max(1L, spark.sparkContext.defaultParallelism.toLong)
-    val fineN = p * spark.conf.getOption(FineBucketsConf)
-      .map(_.toLong).getOrElse(FineBucketsPerCore)
+    val fineN = p * FineBucketsPerCore
     val width = math.max(1L, (hi - lo) / fineN + 1L) // ceil span+1 / fineN
     val fined = keyed.withColumn("__fine", expr(s"(__pk - $lo) div $width"))
     val gN = groupCols.length

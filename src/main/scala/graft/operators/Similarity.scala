@@ -630,41 +630,6 @@ object Similarity {
         transform(col("sumv"), x => x.cast("double") / col("n")).as("c"))
   }
 
-  /** Dev-profiling hook (PqProfile): the iteration-update plan from the
-    * seed codebooks, so planning/execution can be timed separately.
-    * `aggMode` swaps the aggregate to isolate where the iteration's CPU
-    * goes: "full" = the real decimal-mean update; "count" = same
-    * kernel/explode/shuffle but a count-only aggregate (no decimal);
-    * "sumdouble" = plain double vector sum (decimal cast removed).
-    */
-  private[graft] def pqIterUpdateForProfiling(embeddings: DataFrame,
-      aggMode: String = "full"): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val e = embDouble(embeddings)
-    val seeds = e.filter(col("vec_id") >= SeedBase && col("vec_id") < SeedBase + PqK)
-      .orderBy("vec_id").select(col("emb"))
-      .collect().toIndexedSeq.map(_.getSeq[Double](0))
-    val cents = (0 until PqM).map(m => seeds.map(_.slice(m * PqD, (m + 1) * PqD)))
-    aggMode match {
-      case "full" => pqIterUpdate(e, cents)
-      case other =>
-        val parts = (0 until PqM).map { m =>
-          val sub = slice(col("emb"), m * PqD + 1, PqD)
-          val cbLit = typedlit(cents(m).map(_.toSeq))
-          val ccLit = typedlit(cents(m).map(c => dotSeq(c, c)))
-          struct(lit(m).as("m"),
-            call_function("adc_argmin_cell", sub, cbLit, ccLit).as("cell"),
-            sub.as("v"))
-        }
-        val x = e.select(explode(array(parts: _*)).as("x"))
-          .select(col("x.m"), col("x.cell"), col("x.v"))
-          .groupBy("m", "cell")
-        if (other == "count") x.agg(count(lit(1)).as("n"))
-        else x.agg(sum(aggregate(col("v"), lit(0.0), (a, b) => a + b)).as("s"),
-          count(lit(1)).as("n"))
-    }
-  }
-
   def annPqFrom(embeddings: DataFrame,
       codebooksOpt: Option[IndexedSeq[IndexedSeq[Seq[Double]]]] = None): DataFrame = {
     val spark = embeddings.sparkSession

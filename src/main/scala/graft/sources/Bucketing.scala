@@ -31,11 +31,6 @@ object Bucketing {
     * keys per FILE — overshooting only costs bytes, undershooting
     * costs false positives).
     */
-  /** A/B toggle for the bloom-filter write (default on) — the r12
-    * bench experiment's dial for attributing wall-time deltas.
-    */
-  val BloomConf = "spark.graft.bucketing.bloom"
-
   def bucketize(df: DataFrame, key: String, buckets: Int, table: String,
       bloomNdv: Long = 1L << 20): Unit = {
     val spark = df.sparkSession
@@ -44,15 +39,10 @@ object Bucketing {
     val loc = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    val w0 = df.write.mode("overwrite").format("parquet")
-    val off = spark.conf.get(BloomConf, "true") == "false" ||
-      sys.env.get("SPARK_GRAFT_BLOOM").contains("off")
-    val w =
-      if (off) w0
-      else w0
-        .option(s"parquet.bloom.filter.enabled#$key", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$key", bloomNdv.toString)
-    w.bucketBy(buckets, key)
+    df.write.mode("overwrite").format("parquet")
+      .option(s"parquet.bloom.filter.enabled#$key", "true")
+      .option(s"parquet.bloom.filter.expected.ndv#$key", bloomNdv.toString)
+      .bucketBy(buckets, key)
       .sortBy(key)
       .saveAsTable(table)
   }

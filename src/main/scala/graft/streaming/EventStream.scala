@@ -84,15 +84,16 @@ object EventStream {
     * I/O, so oversizing costs latency every batch forever). Overridable
     * per session via [[StatePartitionsConf]] for streams whose state is
     * known-small (the drained fixture runs) or known-huge. Default 4:
-    * the `StreamProfile` sweep measured hdfs@8 → rocksdb@4 cutting every
-    * drain roughly in half on this host.
+    * the r12 drain sweep (OPTIMIZATION_r12.md) measured hdfs@8 →
+    * rocksdb@4 cutting every drain roughly in half on this host.
     */
   val StatePartitions = 4
   val StatePartitionsConf = "spark.graft.streaming.statePartitions"
 
   /** State-store provider for drains — RocksDB by default (changelog-
     * style commits beat the HDFS provider's per-batch file snapshots in
-    * the `StreamProfile` sweep); override via [[StateProviderConf]].
+    * the r12 drain sweep, OPTIMIZATION_r12.md); override via
+    * [[StateProviderConf]].
     */
   val StateProviderConf = "spark.graft.streaming.stateStoreProvider"
   private val RocksDbProvider =
@@ -101,9 +102,10 @@ object EventStream {
   /** The small-state provider choice: for MODEL-scale state (the
     * drained fixture runs — thousands of keys), the HDFS-backed
     * provider at 1–2 partitions skips RocksDB's per-instance open +
-    * commit machinery and measured fastest in the `StreamProfile`
-    * sweep; RocksDB stays the default because production state is
-    * sized to NOT fit comfortably on-heap. A caller that knows its
+    * commit machinery and measured fastest in the r12 drain sweep
+    * (OPTIMIZATION_r12.md); RocksDB stays the default because
+    * production state is sized to NOT fit comfortably on-heap. The
+    * mains' `graft.Session` sets this provider. A caller that knows its
     * state volume sets [[StateProviderConf]]/[[StatePartitionsConf]]
     * accordingly (the per-stream sizing dial documented above).
     */
