@@ -1,18 +1,27 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev-only per-query profiler on the `graft.Session` shape: times each
   * named query in isolation through the noop sink (so the computation
   * is measured, not the sink), labels jobs, prints one line per stage
   * over 0.1 s and one line per streaming micro-batch, and optionally
   * dumps `explain("formatted")` to `<log dir>/<name>_<tag>.txt`.
+  * Each run's line also counts the Spark jobs it launched (`jobs=`) and
+  * the `Window` operators with no partition spec in the plans it
+  * executed (`global_windows=`; each moves its whole input to one task).
   * A failing query prints its error and the run goes on.
   *
   * Usage: runMain graft.QProf q230_ppjoin_pairs,q140_label_communities [tag]
@@ -23,7 +32,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *   SPARK_GRAFT_QPROF_RUNS (default 2) timed noop runs per query;
   *   SPARK_GRAFT_QPROF_CONF="k=v;k2=v2" extra session confs.
   */
-object QProf {
+object QProf extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q230_ppjoin_pairs") match {
       case "all" => SparkEntry.queries.keys.toSeq.sorted
@@ -63,6 +72,17 @@ object QProf {
       }
     })
 
+    // unpartitioned windows in the plans executed since the last reset
+    val globalWindows = new AtomicInteger
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        globalWindows.addAndGet(collectWithSubqueries(qe.executedPlan) {
+          case w: WindowExec if w.partitionSpec.isEmpty => w
+        }.size)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val sc = spark.sparkContext
+
     names.foreach { name =>
       try {
         val fn = SparkEntry.queries(name)
@@ -73,11 +93,17 @@ object QProf {
           Files.writeString(Bench.logDir.resolve(s"${name}_$tag.txt"), txt)
         }
         (1 to runs).foreach { i =>
-          spark.sparkContext.setJobDescription(s"$name run $i")
+          val group = s"$name run $i"
+          PlanBridge.drainListeners(sc)
+          globalWindows.set(0)
+          sc.setJobGroup(group, group, interruptOnCancel = false)
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          sc.clearJobGroup()
           val dt = (System.nanoTime() - t0) / 1e9
-          println(f"[qprof] $name run$i $dt%.2f s")
+          PlanBridge.drainListeners(sc)
+          val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+          println(f"[qprof] $name run$i $dt%.2f s jobs=$jobs global_windows=${globalWindows.get}")
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = false))
         }

@@ -187,11 +187,16 @@ object GraftFunctions {
     ("dup_span_runs", classOf[DupSpanRuns],
       (e: Seq[Expression]) => DupSpanRuns(e(0), e(1))))
 
-  def register(spark: SparkSession): Unit =
+  /** Registers the functions the session does not hold yet, so the
+    * per-operator calls after the first re-register nothing.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 }
 
 /** `spark.sql.extensions`-injectable variant — the deployment path for
