@@ -19,6 +19,17 @@ object TestSpark {
 
   val Sf = "/root/testdata/sf0.001"
 
+  /** The reference checkout's committed seed-42 CSVs (15 / 600 / 600
+    * rows), the only input the golden specs' exact values hold for.
+    * Specs that need them start with `assume(RefData.present, ...)`,
+    * so they run wherever the checkout is and are canceled elsewhere.
+    */
+  object RefData {
+    val Dir = "/root/reference/data"
+    def present: Boolean = new java.io.File(Dir).isDirectory
+    val Missing = s"reference seed-42 CSVs not found at $Dir"
+  }
+
   /** Jobs launched by `f`, isolated via a job group; the status
     * tracker is fed asynchronously off the listener bus, so poll
     * until the count is stable.

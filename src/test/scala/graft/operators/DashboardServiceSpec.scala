@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funspec.AnyFunSpec
 
 import graft.TestSpark
+import graft.TestSpark.RefData
 import graft.model.Schemas
 import graft.sources.SupplierCsv
 
@@ -60,11 +61,12 @@ class DashboardServiceSpec extends AnyFunSpec {
 
   describe("typed model API") {
     it("round-trips supplier-domain KPIs through case classes") {
+      assume(RefData.present, RefData.Missing)
       import Schemas._
       val k = SupplierDomain.kpis(
-        SupplierCsv.read(spark, "/root/reference/data/suppliers.csv", "suppliers"),
-        SupplierCsv.read(spark, "/root/reference/data/purchase_orders.csv", "purchase_orders"),
-        SupplierCsv.read(spark, "/root/reference/data/deliveries.csv", "deliveries"))
+        SupplierCsv.read(spark, s"${RefData.Dir}/suppliers.csv", "suppliers"),
+        SupplierCsv.read(spark, s"${RefData.Dir}/purchase_orders.csv", "purchase_orders"),
+        SupplierCsv.read(spark, s"${RefData.Dir}/deliveries.csv", "deliveries"))
       val typed = Schemas.kpis(k).collect()
       assert(typed.length == 15)
       typed.foreach { t =>
