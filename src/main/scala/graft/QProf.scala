@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
@@ -29,21 +30,58 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
   *   tag != "-" writes plan files under Bench's log dir
   *   (SPARK_GRAFT_BENCH_LOG_DIR, default plans/r13);
-  *   SPARK_GRAFT_QPROF_RUNS (default 2) timed noop runs per query;
+  *   SPARK_GRAFT_QPROF_RUNS (default 2) timed noop runs per query, 0
+  *     only with a tag (plan files only);
   *   SPARK_GRAFT_QPROF_CONF="k=v;k2=v2" extra session confs.
   */
 object QProf extends AdaptiveSparkPlanHelper {
+
+  /** Spark jobs `f` launched: `f` runs under job group `group`, then the
+    * listener bus is drained once (the status tracker is fed from it)
+    * and the group's jobs are read once. The one job counter of the
+    * repo: `ScaleCurve`, this profiler's runs and the specs' job pins
+    * (`TestSpark.jobsOf`) all count through it.
+    */
+  def jobsOf(spark: SparkSession, group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try f
+    finally sc.clearJobGroup()
+    PlanBridge.drainListeners(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** `SPARK_GRAFT_QPROF_RUNS`: timed runs per query, a positive integer;
+    * 0 only when plans are dumped (the plan probe), else nothing would run.
+    */
+  def runsOf(v: String, dumpsPlans: Boolean): Int = {
+    val min = if (dumpsPlans) 0 else 1
+    v.toIntOption.filter(_ >= min).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_QPROF_RUNS must be an integer >= $min" +
+        (if (dumpsPlans) "" else " (0 only with a plan-dump tag)") + s", got '$v'"))
+  }
+
+  /** `SPARK_GRAFT_QPROF_CONF`: `k=v` session confs separated by `;`. */
+  def confsOf(v: String): Seq[(String, String)] =
+    v.split(';').toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, c) if k.nonEmpty => k -> c
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_QPROF_CONF entries must be key=value, got '$kv' in '$v'")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q230_ppjoin_pairs") match {
       case "all" => SparkEntry.queries.keys.toSeq.sorted
       case list => list.split(',').toSeq
     }
     val tag = if (args.length > 1) args(1) else "-"
-    val runs = sys.env.getOrElse("SPARK_GRAFT_QPROF_RUNS", "2").toInt
+    val runs = runsOf(sys.env.getOrElse("SPARK_GRAFT_QPROF_RUNS", "2"), tag != "-")
+    val confs = confsOf(sys.env.getOrElse("SPARK_GRAFT_QPROF_CONF", ""))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
-    sys.env.get("SPARK_GRAFT_QPROF_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     // per-stage wall/exec/cpu, so query time attributes to stages
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
@@ -93,16 +131,14 @@ object QProf extends AdaptiveSparkPlanHelper {
           Files.writeString(Bench.logDir.resolve(s"${name}_$tag.txt"), txt)
         }
         (1 to runs).foreach { i =>
-          val group = s"$name run $i"
           PlanBridge.drainListeners(sc)
           globalWindows.set(0)
-          sc.setJobGroup(group, group, interruptOnCancel = false)
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          sc.clearJobGroup()
-          val dt = (System.nanoTime() - t0) / 1e9
-          PlanBridge.drainListeners(sc)
-          val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+          var dt = 0.0
+          val jobs = jobsOf(spark, s"$name run $i") {
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            dt = (System.nanoTime() - t0) / 1e9
+          }
           println(f"[qprof] $name run$i $dt%.2f s jobs=$jobs global_windows=${globalWindows.get}")
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = false))

@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
-/** Growth-curve harness for the catalog's heaviest queries (the
-  * round-9 bench top-10): run the REAL gated query forms over
-  * replicated fixture directories at two multipliers (default 10× and
-  * 100× of sf0.1) and record wall seconds + scheduler job counts per
-  * query. The 10×→100× wall ratio against the 10× data ratio is the
-  * sub-quadratic evidence the 100 TB story needs; the job-count pair
-  * proves the plan STRUCTURE is scale-invariant (a data-dependent
-  * round blowup or lost checkpoint would move it).
+/** Growth-curve harness for the catalog: run the REAL gated query
+  * forms over replicated fixture directories at two multipliers
+  * (default 10× and 100× of sf0.1) and record wall seconds + scheduler
+  * job counts per query. The 10×→100× wall ratio against the 10× data
+  * ratio is the sub-quadratic evidence the 100 TB story needs; the
+  * job-count pair proves the plan STRUCTURE is scale-invariant (a
+  * data-dependent round blowup or lost checkpoint would move it).
   *
   * Replication is growth-shaped, not copy-shaped — each replica must
   * add WORK, not collapse into the original under the operators'
@@ -27,23 +26,32 @@ import graft.sources.Tables
   *    near-dup clusters quadratically and measure the data, not the
   *    plan);
   *  - embeddings: replica r shifts vec_id (scan/training cost is
-  *    row-bound; vector values don't change the plan shape).
+  *    row-bound; vector values don't change the plan shape);
+  *  - supplier, orders, lineitem: replica r shifts s_suppkey,
+  *    o_orderkey and lineitem's l_orderkey + l_suppkey in lockstep
+  *    (new suppliers with their own orders — the star joins stay 1:1
+  *    per replica instead of fanning out r²);
+  *  - region, nation, customer, part: dimension-sized, copied once.
   *
   * Each multiplier runs in its own SparkSession (fresh memory sinks
   * for the drained streams) with shuffle partitions fixed, so the two
   * arms differ only in data volume.
+  *
+  * Usage: runMain graft.ScaleCurve [mult ...] (default `10 100`);
+  *   SPARK_GRAFT_SF_DIR names the fixture to replicate (default sf0.1);
+  *   multipliers `1 2` over the sf0.01 fixture are the small-scale smoke
+  *   of every listed query.
   */
 object ScaleCurve {
 
   /** BENCH_r09's top-10 wall-time queries, plus the round-10 additions
     * with corpus-scale shuffles (q203's LM scoring join, q207's native
-    * session merge — the map-only r10b ops are covered by ScaleSmoke),
-    * plus the round-11 non-join heavy legs: q198 (BPE training — the
-    * 8 driver-coordinated rounds must stay vocab-bounded as the corpus
-    * grows) and q202 (the ORC write path), plus the round-12 grouped
-    * distributed-prefix family representative q227 (two histogram +
-    * prefix passes — the curve proves the value-grain reduction, not
-    * the raw rows, carries the growth).
+    * session merge), plus the round-11 non-join heavy legs: q198 (BPE
+    * training — the 8 driver-coordinated rounds must stay vocab-bounded
+    * as the corpus grows) and q202 (the ORC write path), plus the
+    * round-12 grouped distributed-prefix family representative q227
+    * (two histogram + prefix passes — the curve proves the value-grain
+    * reduction, not the raw rows, carries the growth).
     */
   val Heavy: Seq[String] = Seq(
     "q103_item_pagerank", "q136_ann_pq_trained", "q140_label_communities",
@@ -56,7 +64,48 @@ object ScaleCurve {
     // the replica-salted disjoint vocabularies keep per-replica
     // candidate neighborhoods local, so the curve measures the plan,
     // not quadratic dup growth
-    "q230_ppjoin_pairs", "q238_hamming_pairs")
+    "q230_ppjoin_pairs", "q238_hamming_pairs",
+    // one query per remaining operator whose cost grows with the
+    // corpus. Text and dedup:
+    "q17_token_stats", "q21_exact_dedup", "q23_simhash",
+    "q22_minhash_candidates", "q24_ngram_jaccard", "q54_dedup_clusters",
+    "q84_winnow_fingerprints", "q80_source_mirrors", "q68_source_kl",
+    "q139_oov_rate", "q166_collocations", "q175_boilerplate_templates",
+    "q178_calibrated_cut", "q179_soft_dedup_weights",
+    "q183_vocab_growth", "q184_dedup_sensitivity", "q185_syndication",
+    "q190_dup_geography", "q191_dup_size_histogram", "q200_bpe_tokenize",
+    "q205_zipf_slope", "q206_char_entropy", "q229_nfc_audit",
+    "q218_quality_model", "q253_vocab_richness", "q215_dedup_agreement",
+    // vectors:
+    "q25_knn_bruteforce", "q26_ann_lsh", "q36_ann_ivf",
+    "q38_embedding_neardup", "q61_kmeans_train", "q75_ann_ivf_trained",
+    "q60_semantic_dedup", "q83_ann_rerank", "q119_matryoshka_recall",
+    "q158_triplet_mining", "q168_uncertainty_sample",
+    "q164_collapse_audit", "q170_source_drift", "q159_hybrid_search",
+    "q176_cluster_medoids", "q180_label_noise", "q189_ivf_balance",
+    "q194_embedding_coverage", "q249_mmr_rerank",
+    // events and the item graph:
+    "q27_event_windows", "q35_topk_per_key", "q37_sessions",
+    "q66_item_cooccurrence", "q109_session_overlap",
+    "q142_link_prediction", "q138_sketch_rollup",
+    "q161_decayed_popularity", "q163_cusum_drift", "q174_event_disorder",
+    "q177_rec_hit_rate", "q181_bot_audit", "q193_item_novelty",
+    "q201_hll_distinct", "q210_oof_encoding", "q219_spearman_corr",
+    "q225_exact_quantiles", "q226_psi_drift", "q248_conformal_coverage",
+    "q252_km_retention", "q247_lpm_enrich",
+    // curation and layouts:
+    "q63_pack_sequences", "q81_shuffle_shards", "q141_priority_sample",
+    "q167_cdc_merge", "q173_k_anonymity", "q182_source_concentration",
+    "q186_curriculum_fill", "q188_truncation_loss",
+    "q195_composition_grid", "q204_rendezvous_shards", "q214_dp_release",
+    "q221_schema_evolution", "q222_time_travel", "q223_mixture_reweight",
+    "q228_partition_evolution",
+    // per-payload codecs and pages (map-only, linear by construction):
+    "q172_video_frames", "q196_avi_frames", "q197_video_neardup",
+    "q199_mp4_keyframes", "q213_mp4_fragmented", "q224_h264_meta",
+    "q250_exif_meta", "q217_audio_tones", "q251_link_graph",
+    // the supplier star:
+    "q246_pareto_suppliers", "q216_ivm_join")
 
   private def session(): SparkSession = {
     val spark = Session.local(32)
@@ -75,6 +124,11 @@ object ScaleCurve {
     val out = s"/dev/shm/graft-curve/m$mult"
     val reps = spark.range(mult).select(col("id").as("__rep"))
     val shift = lit(100000000L) * col("__rep")
+    def write(df: DataFrame, name: String): Unit =
+      df.repartition(32).write.mode("overwrite").parquet(s"$out/$name.parquet")
+    def shifted(name: String, keys: String*): Unit =
+      write(keys.foldLeft(Tables(spark, sf, name).crossJoin(reps))(
+        (df, k) => df.withColumn(k, col(k) + shift)).drop("__rep"), name)
 
     // events must land as ONE FILE literally named events.parquet: the
     // streaming source's pathGlobFilter matches LEAF file names, so a
@@ -111,31 +165,15 @@ object ScaleCurve {
           t => concat(lit("w"), col("__rep"), lit("x"),
             pmod(xxhash64(t, col("__rep")), lit(100000L)))))))
       .drop("__rep")
-    docs.repartition(32).write.mode("overwrite").parquet(s"$out/documents.parquet")
+    write(docs, "documents")
 
-    val emb = Tables.embeddings(spark, sf).crossJoin(reps)
-      .withColumn("vec_id", col("vec_id") + shift)
-      .drop("__rep")
-    emb.repartition(32).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    shifted("embeddings", "vec_id")
+    shifted("supplier", "s_suppkey")
+    shifted("orders", "o_orderkey")
+    shifted("lineitem", "l_orderkey", "l_suppkey")
+    Seq("region", "nation", "customer", "part")
+      .foreach(n => write(Tables(spark, sf, n), n))
     out
-  }
-
-  /** Jobs launched under a job group (the JobCountSpec probe). */
-  private def jobsOf(spark: SparkSession, tag: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(tag, tag, interruptOnCancel = false)
-    try f
-    finally sc.clearJobGroup()
-    var last = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(tag).length
-    var spins = 0
-    while (cur != last && spins < 50) {
-      last = cur
-      Thread.sleep(100)
-      cur = sc.statusTracker.getJobIdsForGroup(tag).length
-      spins += 1
-    }
-    cur
   }
 
   private def runAt(sf: String, mult: Int): Seq[(String, Double, Int)] = {
@@ -145,7 +183,7 @@ object ScaleCurve {
       println(s"[curve] mult=$mult fixture=$dir built")
       Heavy.map { name =>
         val t0 = System.nanoTime()
-        val jobs = jobsOf(spark, s"curve-$mult-$name") {
+        val jobs = QProf.jobsOf(spark, s"curve-$mult-$name") {
           SparkEntry.queries(name)(spark, dir)
             .write.format("noop").mode("overwrite").save()
         }

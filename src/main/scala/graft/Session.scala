@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.streaming.EventStream
 
 /** The one local session shape every main runs on (`Bench`, `Verify`,
-  * `QProf`, the pipelines and the scale harnesses), so a query is timed,
+  * `QProf`, the pipelines and `ScaleCurve`), so a query is timed,
   * verified and profiled under the same confs:
   *  - `local[cores]` with `cores` shuffle partitions;
   *  - UTC session time zone (the fixtures' event-time columns are

@@ -20,9 +20,19 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql, only))
+    spark.stop()
+  }
+
+  /** `oracle_sql.json`: the SQL of every query in `sql`, or only of the
+    * names in `only` when a subset is dumped (so the compare checks
+    * exactly the dumped dirs).
+    */
+  def oracleJson(sql: Map[String, String], only: Option[Set[String]]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in a query's SQL would otherwise make the oracle
+    // compare's json.load fail and check nothing.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -32,9 +42,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    only.fold(sql)(o => sql.filter { case (k, _) => o.contains(k) })
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

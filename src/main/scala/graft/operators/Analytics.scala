@@ -1957,8 +1957,8 @@ object Analytics {
     * the kept set is deterministic and the DuckDB oracle replicates it
     * with the same `row_number()` text. The fixtures' item domain
     * (≤ 25) never reaches the cap, so fixture results are unchanged;
-    * the cap exists for the 100× story (see ScaleSmoke's planted
-    * power-law arm).
+    * the cap exists for the 100× story (`AnalyticsSpec` plants a
+    * power-law bot basket and pins the cap and its pair bound).
     */
   val PairUserCap = 256
 

@@ -1747,15 +1747,13 @@ object Curation {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
     // per-process nonce in the table key: two JVMs sharing a warehouse
-    // (Bench + ScaleSmoke on the same /dev/shm root) must not race each
+    // (Bench + ScaleCurve on the same /dev/shm root) must not race each
     // other's _CURRENT pointer between this run's publishes and reads
     timeTravelOf(Tables.documents(spark, dir), root,
       s"q222_counts_${key}_p${ProcessHandle.current().pid()}")
   }
 
-  /** The publish→publish→diff cycle over an explicit corpus (the
-    * ScaleSmoke arm drives this with the replicated relation).
-    */
+  /** The publish→publish→diff cycle over an explicit corpus. */
   def timeTravelOf(d: DataFrame, root: String, table: String): DataFrame = {
     import graft.sources.AtomicWarehouse
     val spark = d.sparkSession

@@ -1357,8 +1357,8 @@ object Dedup {
     dupSpansFrom(Tables.documents(spark, dir))
 
   /** Per-doc stride-1 gram-hash arrays `(doc_id, kh)` — the map-side
-    * input both the df count and the span kernel read (also used by the
-    * ScaleSmoke shuffle audit).
+    * input both the df count and the span kernel read (`DedupSpec`
+    * checks the count never ships more rows than positions).
     */
   private[graft] def spanGramArrays(docs: DataFrame): DataFrame = {
     val kh = transform(sequence(lit(0), size(col("w")) - SpanGramTokens),

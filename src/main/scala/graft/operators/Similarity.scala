@@ -236,7 +236,7 @@ object Similarity {
   /** `planes` is the scale dial: buckets = 2^planes, candidate pairs
     * ≈ N²/2^planes — the gated query uses [[NumPlanes]] (the q26
     * family); a 100 TB corpus raises it until buckets are cache-sized
-    * (ScaleSmoke drives 8).
+    * (`ScaleCurve` times q180 at the gated [[NumPlanes]]).
     */
   def labelNoiseFrom(embeddings: DataFrame,
       planes: Int = NumPlanes): DataFrame = {
@@ -475,7 +475,7 @@ object Similarity {
   /** `codebookOpt`: pass [[trainCentroids]]' output to quantize against
     * a TRAINED codebook instead of the deterministic seeds (the driver
     * gate runs the seeded default so the oracle reproduces it; the
-    * trained path is spec- and ScaleSmoke-covered).
+    * trained path is spec-covered and `ScaleCurve` times it as q75).
     */
   def annIvfFrom(embeddings: DataFrame,
       codebookOpt: Option[Seq[Seq[Double]]] = None): DataFrame = {
@@ -1008,8 +1008,8 @@ object Similarity {
     * (family, bucket), shuffle_hash both sides so the bucketed pipeline
     * is computed once via exchange reuse), so comparisons scale with
     * Σ_family Σ_bucket n², not corpus². See [[NearDupFamilies]] for the
-    * geometry; `ScaleSmoke` prints the Σ bucket² datapoint vs the old
-    * 4-plane config.
+    * geometry; `SimilaritySpec` gates the Σ bucket² count against the
+    * old 4-plane config.
     */
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame =
     embeddingNearDupFrom(Tables.embeddings(spark, dir))
@@ -1066,10 +1066,10 @@ object Similarity {
   }
 
   /** Σ over (family, bucket) of occupancy² — the number of pair
-    * comparisons the near-dup self-join performs. `ScaleSmoke` prints
-    * this for the banded config vs the legacy single 4-plane family
-    * (families=1, planesPerFamily=4) to demonstrate the 16× comparison
-    * reduction the band geometry buys.
+    * comparisons the near-dup self-join performs. `SimilaritySpec`
+    * compares it for the banded config vs the legacy single 4-plane
+    * family (families=1, planesPerFamily=4) on the fixture, gating the
+    * comparison reduction the band geometry buys.
     */
   def nearDupComparisons(embeddings: DataFrame,
       families: Int = NearDupFamilies,

@@ -1299,7 +1299,7 @@ object TextAnalysis {
   val LmLambda = 0.75
 
   /** q203/q209 head sizes for the scoring-join discipline (conf-tunable
-    * so specs and the ScaleSmoke Zipf arm can force both paths): the
+    * so the specs, a Zipf corpus among them, can force both paths): the
     * top-V unigrams / top-B bigrams BY COUNT are broadcast — true model
     * constants — and only transitions the heads cannot resolve ride a
     * shuffle join, whose keys are rare by construction (a token outside

@@ -46,13 +46,4 @@ object Evolved {
       .repartition(4)
       .write.mode("append").parquet(path)
   }
-
-  /** The evolved layout of an EXPLICIT relation at an explicit path —
-    * the ScaleSmoke arm's entry, so the 10× leg writes and merges a
-    * replicated corpus instead of re-measuring the fixture constant.
-    */
-  def writeAndRead(docs: DataFrame, path: String): DataFrame = {
-    writeVintages(docs, path)
-    docs.sparkSession.read.option("mergeSchema", "true").parquet(path)
-  }
 }

@@ -41,9 +41,7 @@ object PartitionEvolved {
     relCache.computeIfAbsent((spark, path), _ => read(spark, path))
   }
 
-  /** Write both vintages of an EXPLICIT relation (the ScaleSmoke arm's
-    * entry, so the 10× leg lays out and merges a replicated corpus).
-    */
+  /** Write both vintages of an explicit events relation to `path`. */
   def writeVintages(events: DataFrame, path: String): Unit = {
     val cut = to_timestamp(lit(MigrateTs))
     events.filter(col("ts") < cut)

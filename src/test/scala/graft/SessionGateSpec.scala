@@ -9,20 +9,35 @@ import org.scalatest.funspec.AnyFunSpec
 /** Every main runs on [[graft.Session]]'s one session shape: a second
   * hand-built `SparkSession` is how the mains' confs drifted apart
   * (time zone, aggregate pushdown, streaming state dials), so the
-  * builder call may appear only in `graft/Session.scala`.
+  * builder call may appear only in `graft/Session.scala`. Job counts
+  * likewise come from one counter, [[graft.QProf.jobsOf]]: copies of it
+  * drifted apart (polling vs draining the listener bus).
   */
 class SessionGateSpec extends AnyFunSpec {
+
+  /** `.scala` files under `root` whose text contains `needle`, relative. */
+  private def filesContaining(root: String, needle: String): List[String] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"no $dir under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(needle))
+      .map((p: Path) => dir.relativize(p).toString)
+      .toList.sorted
+    finally walk.close()
+  }
+
   it("SparkSession.builder appears only in graft/Session.scala") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(root)
-    val builders =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map((p: Path) => root.relativize(p).toString)
-        .toList.sorted
-      finally walk.close()
-    assert(builders == List("graft/Session.scala"))
+    assert(filesContaining("src/main/scala", "SparkSession.builder") ==
+      List("graft/Session.scala"))
+  }
+
+  it("getJobIdsForGroup appears only in graft/QProf.scala") {
+    assert(filesContaining("src/main/scala", "getJobIdsForGroup") ==
+      List("graft/QProf.scala"))
+    // this gate names the call itself
+    assert(filesContaining("src/test/scala", "getJobIdsForGroup") ==
+      List("graft/SessionGateSpec.scala"))
   }
 }

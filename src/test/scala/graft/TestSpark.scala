@@ -30,24 +30,6 @@ object TestSpark {
     val Missing = s"reference seed-42 CSVs not found at $Dir"
   }
 
-  /** Jobs launched by `f`, isolated via a job group; the status
-    * tracker is fed asynchronously off the listener bus, so poll
-    * until the count is stable.
-    */
-  def jobsOf(tag: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(tag, tag, interruptOnCancel = false)
-    try f
-    finally sc.clearJobGroup()
-    var last = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(tag).length
-    var spins = 0
-    while (cur != last && spins < 50) {
-      last = cur
-      Thread.sleep(100)
-      cur = sc.statusTracker.getJobIdsForGroup(tag).length
-      spins += 1
-    }
-    cur
-  }
+  /** Jobs launched by `f`, counted by [[graft.QProf.jobsOf]]. */
+  def jobsOf(tag: String)(f: => Unit): Int = QProf.jobsOf(spark, tag)(f)
 }

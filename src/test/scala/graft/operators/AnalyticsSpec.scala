@@ -280,6 +280,17 @@ class AnalyticsSpec extends AnyFunSpec {
       assert(supports == supports.sorted.reverse)
     }
 
+    it("still fills the top-k when half the events are one user's hot basket") {
+      // user 0 touches 1000 items (pruned to PairUserCap) while every
+      // other user holds one: the user-keyed pair self-join's hot key
+      val ev = spark.range(0, 4000).selectExpr(
+        "id AS event_id",
+        "CASE WHEN id % 2 = 0 THEN 0L ELSE 1 + id % 200 END AS user_id",
+        "concat('{\"k\": ', CASE WHEN id % 2 = 0 THEN id % 2000 " +
+          "ELSE id % 20 END, '}') AS props")
+      assert(Analytics.itemCooccurrenceFrom(ev).count() == Analytics.CoocTopK)
+    }
+
     it("caps a power-law user's basket at PairUserCap, keeping the " +
       "globally most frequent items (count DESC, item ASC)") {
       val t = ts("2024-01-01 00:00:00")

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funspec.AnyFunSpec
 
@@ -41,8 +40,8 @@ class DashboardJobSpec extends AnyFunSpec with AdaptiveSparkPlanHelper {
     }
     spark.listenerManager.register(listener)
     try {
+      // jobsOf drains the listener bus, so every executed plan is in
       val jobs = TestSpark.jobsOf(tag)(f)
-      PlanBridge.drainListeners(spark.sparkContext)
       (jobs, plans.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }

@@ -270,6 +270,19 @@ class DedupSpec extends AnyFunSpec {
         "exact maximal span boundaries; doc 3 (no shared gram) and " +
           "doc 4 (within-doc repeat only) must be absent")
     }
+
+    it("the df count reads no more distinct gram rows than positions") {
+      // the count shuffle ships per-doc DISTINCT gram hashes, never more
+      // rows than the stride-1 positions; a within-doc repeat ships fewer
+      import org.apache.spark.sql.functions.{array_distinct, size, sum}
+      def rows(d: DataFrame) = Dedup.spanGramArrays(d)
+        .agg(sum(size($"kh")), sum(size(array_distinct($"kh")))).head()
+      val fx = rows(graft.sources.Tables.documents(spark, TestSpark.Sf))
+      assert(fx.getLong(0) > 0L && fx.getLong(1) <= fx.getLong(0), fx.toString)
+      val rep = "p1 p2 p3 p4 p5 p6 p7 p8"
+      val r = rows(docs((1L, s"$rep mid $rep")))
+      assert(r.getLong(1) < r.getLong(0), r.toString)
+    }
   }
 
   describe("containmentPairs (q85)") {
@@ -474,6 +487,23 @@ class DedupSpec extends AnyFunSpec {
       assert(local.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
           20L -> 1L, 21L -> 1L, 22L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
+  }
+
+  describe("clustersOfVerified on a star hub") {
+    it("the distributed rounds resolve one hub and its spokes to one cluster") {
+      // the hot-key aggregate path of large-star/small-star: one hub of
+      // degree 2000, with the driver union-find shortcut disabled so the
+      // log-round machinery must converge on its own
+      val spokes = 2000L
+      val edges = spark.range(1, spokes + 1).selectExpr("0L AS doc_a", "id AS doc_b")
+      val r =
+        try {
+          spark.conf.set(Dedup.CcLocalEdgeMaxConf, "0")
+          Dedup.clustersOfVerified(edges).collect()
+        } finally spark.conf.unset(Dedup.CcLocalEdgeMaxConf)
+      assert(r.length == spokes + 1, s"star must resolve whole: ${r.length}")
+      assert(r.forall(x => x.getLong(1) == 0L && x.getLong(2) == spokes + 1))
     }
   }
 

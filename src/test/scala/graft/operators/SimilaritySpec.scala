@@ -171,7 +171,7 @@ class SimilaritySpec extends AnyFunSpec {
       val banded = Similarity.nearDupComparisons(fixture)
       // asymptotically ≈16× fewer (4·N²/256 vs N²/16); at the 500-vector
       // fixture bucket skew and the +N diagonal terms dominate, so gate a
-      // conservative 2× here — ScaleSmoke prints the large-N datapoint
+      // conservative 2× here — ScaleCurve times q38 at large N
       assert(banded * 2 < legacy,
         s"banded=$banded should be >=2x under legacy=$legacy on the fixture")
     }

@@ -587,6 +587,26 @@ class TextAnalysisSpec extends AnyFunSpec {
     }
   }
 
+  describe("bigramLm (q203) on a Zipf corpus") {
+    it("scores every doc when the vocabulary outgrows the heads") {
+      // token ranks drawn log-uniform over 50k types, so a few hot
+      // tokens carry much of the mass and the tail is head-rare; heads
+      // sized below the vocab and broadcast disabled send the tail down
+      // the cold shuffle joins
+      val zipf = spark.range(0, 400).selectExpr(
+        "id AS doc_id",
+        "concat_ws(' ', transform(sequence(1, 30), i -> concat('t', " +
+          "cast(exp(ln(50000.0d) * (pmod(xxhash64(id, i), 1000000) " +
+          "/ 1000000.0d)) AS int)))) AS text")
+      val confs = Map(
+        TextAnalysis.LmHeadVConf -> "512", TextAnalysis.LmHeadBConf -> "4096",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assert(TextAnalysis.bigramLmFrom(zipf).count() == 400L)
+      finally confs.keys.foreach(spark.conf.unset)
+    }
+  }
+
   describe("heldoutPpl (q209)") {
     // the q45 split rule, re-derived (hash32("split|"+id) % 100)
     def bucket(id: Long): Long = {
