@@ -36,21 +36,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object QProf extends AdaptiveSparkPlanHelper {
 
-  /** Spark jobs `f` launched: `f` runs under job group `group`, then the
-    * listener bus is drained once (the status tracker is fed from it)
-    * and the group's jobs are read once. The one job counter of the
-    * repo: `ScaleCurve`, this profiler's runs and the specs' job pins
-    * (`TestSpark.jobsOf`) all count through it.
-    */
-  def jobsOf(spark: SparkSession, group: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    try f
-    finally sc.clearJobGroup()
-    PlanBridge.drainListeners(sc)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   /** `SPARK_GRAFT_QPROF_RUNS`: timed runs per query, a positive integer;
     * 0 only when plans are dumped (the plan probe), else nothing would run.
     */
@@ -134,7 +119,7 @@ object QProf extends AdaptiveSparkPlanHelper {
           PlanBridge.drainListeners(sc)
           globalWindows.set(0)
           var dt = 0.0
-          val jobs = jobsOf(spark, s"$name run $i") {
+          val jobs = PlanBridge.jobsOf(spark, s"$name run $i") {
             val t0 = System.nanoTime()
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             dt = (System.nanoTime() - t0) / 1e9

@@ -236,7 +236,7 @@ object Similarity {
   /** `planes` is the scale dial: buckets = 2^planes, candidate pairs
     * ≈ N²/2^planes — the gated query uses [[NumPlanes]] (the q26
     * family); a 100 TB corpus raises it until buckets are cache-sized
-    * (`ScaleCurve` times q180 at the gated [[NumPlanes]]).
+    * (`ScaleCurve` adds ⌈log2 mult⌉ planes at each multiplier).
     */
   def labelNoiseFrom(embeddings: DataFrame,
       planes: Int = NumPlanes): DataFrame = {

@@ -10,7 +10,8 @@ import org.apache.spark.sql.classic.Dataset
 /** Minimal bridge to three package-private internals that Spark exposes
   * no public equivalent for: wrapping a custom [[LogicalPlan]] node into
   * a DataFrame (`Dataset.ofRows`), recovering the Catalyst [[Expression]]
-  * behind a public [[Column]], and waiting for the driver's listener bus.
+  * behind a public [[Column]], and waiting for the driver's listener bus
+  * (with the job counter built on that wait).
   * Lives under `org.apache.spark.sql` for package visibility only — the
   * standard pattern for Spark extension libraries; everything else in
   * graft uses public APIs.
@@ -31,4 +32,19 @@ object PlanBridge {
     * asynchronously.
     */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Spark jobs `f` launched: `f` runs under job group `group`, then the
+    * listener bus is drained once (the status tracker is fed from it)
+    * and the group's jobs are read once. The one job counter of the
+    * repo: `ScaleCurve`, `QProf`'s runs and the specs' job pins
+    * (`TestSpark.jobsOf`) all count through it.
+    */
+  def jobsOf(spark: SparkSession, group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try f
+    finally sc.clearJobGroup()
+    drainListeners(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }

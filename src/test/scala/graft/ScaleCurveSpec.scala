@@ -4,8 +4,9 @@ import org.scalatest.funspec.AnyFunSpec
 
 class ScaleCurveSpec extends AnyFunSpec {
   it("times only catalog queries, each once") {
-    val heavy = ScaleCurve.Heavy
-    assert(heavy.filterNot(SparkEntry.queries.contains).isEmpty)
-    assert(heavy.distinct == heavy)
+    val listed = ScaleCurve.CorpusScaling
+    assert(listed.filterNot(SparkEntry.queries.contains).isEmpty)
+    assert(listed.distinct == listed)
+    assert(ScaleCurve.QuadraticOutput.subsetOf(listed.toSet))
   }
 }

@@ -10,7 +10,8 @@ import org.scalatest.funspec.AnyFunSpec
   * hand-built `SparkSession` is how the mains' confs drifted apart
   * (time zone, aggregate pushdown, streaming state dials), so the
   * builder call may appear only in `graft/Session.scala`. Job counts
-  * likewise come from one counter, [[graft.QProf.jobsOf]]: copies of it
+  * likewise come from one counter,
+  * [[org.apache.spark.sql.graft.PlanBridge.jobsOf]]: copies of it
   * drifted apart (polling vs draining the listener bus).
   */
 class SessionGateSpec extends AnyFunSpec {
@@ -33,9 +34,9 @@ class SessionGateSpec extends AnyFunSpec {
       List("graft/Session.scala"))
   }
 
-  it("getJobIdsForGroup appears only in graft/QProf.scala") {
+  it("getJobIdsForGroup appears only in org/apache/spark/sql/graft/PlanBridge.scala") {
     assert(filesContaining("src/main/scala", "getJobIdsForGroup") ==
-      List("graft/QProf.scala"))
+      List("org/apache/spark/sql/graft/PlanBridge.scala"))
     // this gate names the call itself
     assert(filesContaining("src/test/scala", "getJobIdsForGroup") ==
       List("graft/SessionGateSpec.scala"))

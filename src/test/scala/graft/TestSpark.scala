@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.PlanBridge
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
@@ -30,6 +31,8 @@ object TestSpark {
     val Missing = s"reference seed-42 CSVs not found at $Dir"
   }
 
-  /** Jobs launched by `f`, counted by [[graft.QProf.jobsOf]]. */
-  def jobsOf(tag: String)(f: => Unit): Int = QProf.jobsOf(spark, tag)(f)
+  /** Jobs launched by `f`, counted by
+    * [[org.apache.spark.sql.graft.PlanBridge.jobsOf]].
+    */
+  def jobsOf(tag: String)(f: => Unit): Int = PlanBridge.jobsOf(spark, tag)(f)
 }
