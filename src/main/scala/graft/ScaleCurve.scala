@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.PlanBridge
 import graft.sources.Tables
 
 /** Growth-curve harness for the catalog: run the REAL gated query
-  * forms (three on a dial grown with the corpus, see `form`) over
+  * forms (four on a scale dial, see `form`) over
   * replicated fixture directories at two multipliers
   * (default 10× and 100× of sf0.1) and record wall seconds + scheduler
   * job counts per query. The 10×→100× wall ratio against the 10× data
@@ -106,25 +106,19 @@ object ScaleCurve {
     */
   val QuadraticOutput: Set[String] = Set("q109_session_overlap", "q197_video_neardup")
 
-  private def session(): SparkSession = {
-    val spark = Session.local(32)
-    // the q238 wide-signature dial: the 32-bit gate geometry
-    // saturates its 256-bucket slices around 10^5 docs; the curve's
-    // arms run the documented scale path (60-bit / 15-bit slices)
-    spark.conf.set(graft.operators.Dedup.HamBitsConf, "60")
-    spark
-  }
-
   /** The form the curve runs for `name` at `mult`. Three vector
     * operators pair within buckets of a fixed count under their catalog
     * dial, so their pair term is Σ bucket² ≈ N²/buckets: the curve runs
     * them on the dial their scaladocs prescribe for a growing corpus —
     * SRP planes + ⌈log2 mult⌉ (buckets ∝ N, pair term ∝ N) and IVF cells
-    * ∝ √mult (pair term ∝ N^1.5). At mult 1 every form is the catalog
-    * query.
+    * ∝ √mult (pair term ∝ N^1.5). At mult 1 these forms are the catalog
+    * query. q238 runs its documented scale path at every multiplier: the
+    * 32-bit catalog signature saturates its 256-bucket slices around
+    * 10^5 docs, so the curve runs the 60-bit signature (15-bit slices).
     */
   private def form(name: String, mult: Int): (SparkSession, String) => DataFrame = {
     import graft.operators.Similarity._
+    import graft.operators.Dedup.{hammingPairsFrom, replicaPlanted}
     val morePlanes = 32 - Integer.numberOfLeadingZeros(mult - 1)
     val cells = NumCells * math.ceil(math.sqrt(mult.toDouble)).toInt
     name match {
@@ -135,6 +129,8 @@ object ScaleCurve {
           NearDupPlanesPerFamily + morePlanes)
       case "q60_semantic_dedup" => (spark, dir) =>
         semanticDedupFrom(Tables.embeddings(spark, dir), cells)
+      case "q238_hamming_pairs" => (spark, dir) =>
+        hammingPairsFrom(replicaPlanted(Tables.documents(spark, dir)), bits = 60)
       case _ => SparkEntry.queries(name)
     }
   }
@@ -206,7 +202,7 @@ object ScaleCurve {
   }
 
   private def runAt(sf: String, mult: Int): Seq[(String, Double, Int)] = {
-    val spark = session()
+    val spark = Session.local(32)
     try {
       val dir = buildFixture(spark, sf, mult)
       println(s"[curve] mult=$mult fixture=$dir built")
@@ -223,10 +219,29 @@ object ScaleCurve {
     } finally spark.stop()
   }
 
+  /** The multipliers `args` name: at least two positive integers in
+    * strictly ascending order, since the gate compares the first arm
+    * with the last; none means `10 100`. Checked before any session
+    * starts.
+    */
+  def multsOf(args: Seq[String]): Seq[Int] =
+    if (args.isEmpty) Seq(10, 100)
+    else {
+      val mults = args.map(a => a.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"ScaleCurve multipliers must be positive integers, got '$a'")))
+      require(mults.size >= 2,
+        s"ScaleCurve needs at least two multipliers, got '${args.mkString(" ")}'")
+      mults.zip(mults.tail).find { case (a, b) => b <= a }.foreach { case (a, b) =>
+        throw new IllegalArgumentException(
+          s"ScaleCurve multipliers must ascend strictly, got '$b' after '$a'")
+      }
+      mults
+    }
+
   def main(args: Array[String]): Unit = {
+    val mults = multsOf(args.toSeq)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val mults =
-      if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(10, 100)
     val arms = mults.map(m => m -> runAt(sf, m))
     val lo = arms.head
     val hi = arms.last

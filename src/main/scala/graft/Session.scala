@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.streaming.EventStream
-
 /** The one local session shape every main runs on (`Bench`, `Verify`,
   * `QProf`, the pipelines and `ScaleCurve`), so a query is timed,
   * verified and profiled under the same confs:
@@ -11,12 +9,7 @@ import graft.streaming.EventStream
   *  - UTC session time zone (the fixtures' event-time columns are
   *    normalized to TimestampType, so the zone must be pinned);
   *  - no UI; shuffle scratch and warehouse on tmpfs;
-  *  - parquet aggregate pushdown;
-  *  - the drained fixture streams on the HDFS state provider at 2 state
-  *    partitions: their state is model-scale (thousands of keys), where
-  *    RocksDB measured 2–5× slower per drain (OPTIMIZATION_r12.md,
-  *    stream state-partition re-sweep). Production-scale state keeps
-  *    the drain's RocksDB default.
+  *  - parquet aggregate pushdown.
   *
   * Test sessions (`TestSpark`, with task-retry injection) build their
   * own.
@@ -42,8 +35,6 @@ object Session {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set(EventStream.StateProviderConf, EventStream.HdfsStateProvider)
-    spark.conf.set(EventStream.StatePartitionsConf, "2")
     spark
   }
 }

@@ -1975,8 +1975,10 @@ object Analytics {
   val DimBroadcastMax = 4000000L
 
   private def dimBroadcast(dim: DataFrame): DataFrame = {
-    val hint = dim.sparkSession.conf
-      .getOption("spark.graft.graph.domainSizeHint").map(_.toLong)
+    val key = "spark.graft.graph.domainSizeHint"
+    val hint = dim.sparkSession.conf.getOption(key).map(v =>
+      v.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a non-negative item count, got '$v'")))
     if (hint.exists(_ > DimBroadcastMax)) dim else broadcast(dim)
   }
 

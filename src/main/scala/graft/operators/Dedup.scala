@@ -1055,21 +1055,18 @@ object Dedup {
   def hammingPairs(spark: SparkSession, dir: String): DataFrame =
     hammingPairsFrom(replicaPlanted(Tables.documents(spark, dir)))
 
-  /** q238 signature-width dial: 32 (the gate default — 8-bit slices,
-    * 256 buckets) or 60 (15-bit slices, 32k buckets). Slice-bucket
+  /** The radius-kept pair relation (doc_a, doc_b, dist) behind q238's
+    * histogram — also the simhash arm of q258's scorecard. `bits` is
+    * the signature width: 32 (the catalog's — 8-bit slices, 256
+    * buckets) or 60 (15-bit slices, 32k buckets). Slice-bucket
     * occupancy is corpus/2^sliceBits per slice, so the 32-bit geometry
     * saturates around 10⁵ docs and the wide signature carries the same
     * plan two orders of magnitude further — ScaleCurve's arms run 60.
     */
-  val HamBitsConf = "spark.graft.hamming.bits"
-
-  /** The radius-kept pair relation (doc_a, doc_b, dist) behind q238's
-    * histogram — also the simhash arm of q258's scorecard.
-    */
-  private[operators] def hammingKeptFrom(docs: DataFrame): DataFrame = {
+  private[operators] def hammingKeptFrom(docs: DataFrame,
+      bits: Int = 32): DataFrame = {
+    require(bits == 32 || bits == 60, s"hamming signature bits must be 32 or 60, got $bits")
     GraftFunctions.register(docs.sparkSession)
-    val bits = docs.sparkSession.conf.get(HamBitsConf, "32").toInt
-    require(bits == 32 || bits == 60, s"$HamBitsConf must be 32 or 60")
     val (fn, sliceBits) = if (bits == 60) ("simhash60", 15) else ("simhash32", 8)
     val mask = (1 << sliceBits) - 1
     val sh = Tables.widened(docs, col("doc_id"))
@@ -1090,8 +1087,8 @@ object Dedup {
       .select("doc_a", "doc_b", "dist")
   }
 
-  def hammingPairsFrom(docs: DataFrame): DataFrame = {
-    val kept = hammingKeptFrom(docs)
+  def hammingPairsFrom(docs: DataFrame, bits: Int = 32): DataFrame = {
+    val kept = hammingKeptFrom(docs, bits)
     val p = kept.groupBy("dist").agg(count(lit(1)).as("n_pairs"))
     val dd = kept
       .select(col("dist"),
@@ -1182,11 +1179,13 @@ object Dedup {
     * large/small-star iterations run unchanged; `DedupSpec` pins both
     * paths to identical output.
     */
-  val CcLocalEdgeMaxConf = "spark.graft.cc.localEdgeMax"
-  val CcLocalEdgeMaxDefault = 1L << 20
+  val CcLocalEdgeMax = 1L << 20
 
-  /** CC over an explicit verified-pair relation (columns doc_a, doc_b). */
-  def clustersOfVerified(verified: DataFrame): DataFrame = {
+  /** CC over an explicit verified-pair relation (columns doc_a, doc_b);
+    * graphs of at most `localEdgeMax` edges take the driver solve.
+    */
+  def clustersOfVerified(verified: DataFrame,
+      localEdgeMax: Long = CcLocalEdgeMax): DataFrame = {
     val spark = verified.sparkSession
     import spark.implicits._
     // canonical directed form: u = larger endpoint, v = smaller
@@ -1206,9 +1205,7 @@ object Dedup {
     }
     var cur = sig(e)
 
-    val localMax = spark.conf.get(CcLocalEdgeMaxConf,
-      CcLocalEdgeMaxDefault.toString).toLong
-    if (cur._1 > 0L && cur._1 <= localMax) {
+    if (cur._1 > 0L && cur._1 <= localEdgeMax) {
       // driver solve: the collect reads the already-checkpointed edges
       // (no pipeline recompute); min-rooted union-find reproduces the
       // star fixpoint's labels exactly (component min as cluster_id)

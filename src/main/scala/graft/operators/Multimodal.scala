@@ -2224,13 +2224,13 @@ object Multimodal {
     entry(0xA002, 4, 1, inlineLong = 8L * (1 + m(4)))
     entry(0xA003, 4, 1, inlineLong = 8L * (1 + m(3)))
     bb.putInt(0)
-    bb.put((make + " ").getBytes("US-ASCII"))
-      .put((model + " ").getBytes("US-ASCII"))
-      .put((dt + " ").getBytes("US-ASCII"))
+    bb.put((make + "\u0000").getBytes("US-ASCII"))
+      .put((model + "\u0000").getBytes("US-ASCII"))
+      .put((dt + "\u0000").getBytes("US-ASCII"))
     val tiff =
       if (armTrunc) java.util.Arrays.copyOfRange(bb.array(), 0, 9)
       else bb.array()
-    val payload = "Exif  ".getBytes("US-ASCII") ++ tiff
+    val payload = "Exif\u0000\u0000".getBytes("US-ASCII") ++ tiff
     val out = java.nio.ByteBuffer.allocate(2 + 4 + payload.length + 2)
     out.put(0xFF.toByte).put(0xD8.toByte) // SOI
       .put(0xFF.toByte).put(0xE1.toByte) // APP1
@@ -2279,7 +2279,7 @@ object Multimodal {
         val len = ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
         if (len < 2 || p + 2 + len > b.length) return fail
         if (marker == 0xe1 && len >= 8 &&
-            new String(b, p + 4, 6, "US-ASCII") == "Exif  ")
+            new String(b, p + 4, 6, "US-ASCII") == "Exif\u0000\u0000")
           tiff = java.util.Arrays.copyOfRange(b, p + 10, p + 2 + len)
         p += 2 + len
       }
@@ -2314,7 +2314,7 @@ object Multimodal {
         val src = if (cnt <= 4) e + 8 else u32(e + 8)
         if (src < 0 || src + cnt > n) return null
         val raw = new String(tiff, src.toInt, cnt.toInt, "US-ASCII")
-        if (raw.nonEmpty && raw.last == ' ') raw.dropRight(1) else raw
+        if (raw.nonEmpty && raw.last == '\u0000') raw.dropRight(1) else raw
       }
       def walkIfd(off: Long, sub: Boolean): Boolean = {
         val cnt = u16(off)

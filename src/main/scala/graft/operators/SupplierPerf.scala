@@ -381,7 +381,7 @@ object SupplierPerf {
     * total). 8 keeps the cell-metadata relation at ≤512 rows —
     * driver-trivial — while carving enough strict-dominance structure
     * to prune the bulk of a correlated corpus before the candidate
-    * join. Conf-tunable: `spark.graft.skyline.grid`.
+    * join. `paretoFrom`'s `grid` parameter overrides it.
     */
   val SkylineGrid = 8
 
@@ -418,9 +418,8 @@ object SupplierPerf {
       Tables.lineitem(spark, dir),
       Tables.orders(spark, dir))
 
-  def paretoFrom(supplier: DataFrame, lineitem: DataFrame, orders: DataFrame): DataFrame = {
-    val g = supplier.sparkSession.conf
-      .getOption("spark.graft.skyline.grid").map(_.toInt).getOrElse(SkylineGrid)
+  def paretoFrom(supplier: DataFrame, lineitem: DataFrame, orders: DataFrame,
+      grid: Int = SkylineGrid): DataFrame = {
     val obj = factsFrom(supplier, lineitem, orders)
       .groupBy("s_suppkey")
       .agg(
@@ -436,7 +435,7 @@ object SupplierPerf {
       min("ret_lines").as("mn2"), max("ret_lines").as("mx2"),
       min("o3").as("mn3"), max("o3").as("mx3"))
     def cellOf(v: String, mn: String, mx: String): Column =
-      expr(s"CAST((($v - $mn) * $g) DIV ($mx - $mn + 1) AS INT)")
+      expr(s"CAST((($v - $mn) * $grid) DIV ($mx - $mn + 1) AS INT)")
     val cells = obj.crossJoin(broadcast(bounds))
       .select(col("s_suppkey"), col("late_lines"), col("ret_lines"),
         col("rev_u"), col("o3"),

@@ -1298,18 +1298,17 @@ object TextAnalysis {
   /** q203 interpolation weight on the bigram MLE term. */
   val LmLambda = 0.75
 
-  /** q203/q209 head sizes for the scoring-join discipline (conf-tunable
-    * so the specs, a Zipf corpus among them, can force both paths): the
-    * top-V unigrams / top-B bigrams BY COUNT are broadcast — true model
-    * constants — and only transitions the heads cannot resolve ride a
-    * shuffle join, whose keys are rare by construction (a token outside
-    * the top-V head has count below the head floor, so no reducer can
-    * own more than that many probe rows per key).
+  /** q203/q209 head sizes for the scoring-join discipline (parameters
+    * of the `…From` cores, so the specs, a Zipf corpus among them, can
+    * force both paths): the top-V unigrams / top-B bigrams BY COUNT are
+    * broadcast — true model constants — and only transitions the heads
+    * cannot resolve ride a shuffle join, whose keys are rare by
+    * construction (a token outside the top-V head has count below the
+    * head floor, so no reducer can own more than that many probe rows
+    * per key).
     */
-  val LmHeadVConf = "spark.graft.lm.headV"
-  val LmHeadVDefault = 32768
-  val LmHeadBConf = "spark.graft.lm.headB"
-  val LmHeadBDefault = 262144
+  val LmHeadV = 32768
+  val LmHeadB = 262144
 
   /** Shared q203/q209 scoring-join kernel: annotate the corpus-scale
     * transition relation `docBi(doc_id, x, y)` with `c_xy`, `c_x`,
@@ -1335,10 +1334,7 @@ object TextAnalysis {
     * localCheckpointed (they also feed the totals row).
     */
   private def lmScoredCounts(docBi: DataFrame, uni: DataFrame,
-      biCnt: DataFrame): DataFrame = {
-    val spark = docBi.sparkSession
-    val headV = spark.conf.get(LmHeadVConf, LmHeadVDefault.toString).toInt
-    val headB = spark.conf.get(LmHeadBConf, LmHeadBDefault.toString).toInt
+      biCnt: DataFrame, headV: Int, headB: Int): DataFrame = {
     val uniHead = uni.orderBy(col("c").desc, col("t")).limit(headV)
     val biHead = biCnt.orderBy(col("c_xy").desc, col("x"), col("y"))
       .limit(headB)
@@ -1353,13 +1349,13 @@ object TextAnalysis {
       col("c_y_h").isNotNull
     val hot = probed.filter(hotPred).select(col("doc_id"),
       col("c_xy_h").as("c_xy"), col("c_x_h").as("c_x"), col("c_y_h").as("c_y"))
-    // sentinel probe key for head-resolved columns: " <salt>" is no
+    // sentinel probe key for head-resolved columns: NUL + salt is no
     // real token (tokens are \w+/punct), so it never matches; the salt
     // spreads the no-op rows across the exchange
     val salt = pmod(xxhash64(col("doc_id"), col("x"), col("y")), lit(64))
       .cast("string")
     def tailKey(headVal: Column, k: Column): Column =
-      when(headVal.isNull, k).otherwise(concat(lit(" "), salt))
+      when(headVal.isNull, k).otherwise(concat(lit("\u0000"), salt))
     val biT = biCnt.select(col("x").as("bx"), col("y").as("by"),
       col("c_xy").as("c_xy_t"))
     val uxT = uni.select(col("t").as("tx"), col("c").as("c_x_t"))
@@ -1408,7 +1404,8 @@ object TextAnalysis {
   def bigramLm(spark: SparkSession, dir: String): DataFrame =
     bigramLmFrom(Tables.documents(spark, dir))
 
-  def bigramLmFrom(docs: DataFrame): DataFrame = {
+  def bigramLmFrom(docs: DataFrame, headV: Int = LmHeadV,
+      headB: Int = LmHeadB): DataFrame = {
     val w = TextFns.toks(col("text"))
     val tk = docs.select(col("doc_id"), w.as("w"))
     val uni = tk.select(explode(col("w")).as("t")).filter(col("t") =!= "")
@@ -1426,7 +1423,7 @@ object TextAnalysis {
       .localCheckpoint()
     val p = lit(LmLambda) * coalesce(col("c_xy"), lit(0L)) / col("c_x") +
       lit(1.0 - LmLambda) * col("c_y") / col("n_total")
-    lmScoredCounts(docBi, uni, biCnt)
+    lmScoredCounts(docBi, uni, biCnt, headV, headB)
       .crossJoin(broadcast(total))
       .select(col("doc_id"), (-log(p)).as("nll"))
       .groupBy("doc_id")
@@ -1461,7 +1458,8 @@ object TextAnalysis {
   def heldoutPpl(spark: SparkSession, dir: String): DataFrame =
     heldoutPplFrom(Tables.documents(spark, dir))
 
-  def heldoutPplFrom(docs: DataFrame): DataFrame = {
+  def heldoutPplFrom(docs: DataFrame, headV: Int = LmHeadV,
+      headB: Int = LmHeadB): DataFrame = {
     val bucket = TextFns.hash32(
       concat(lit("split|"), col("doc_id").cast("string"))) % 100
     // the q203 tk discipline: materialize the token array ONCE per doc
@@ -1496,7 +1494,7 @@ object TextAnalysis {
       lit(0.0)) +
       lit(1.0 - LmLambda) * (coalesce(col("c_y"), lit(0L)) + 1L) /
         (col("n_total") + col("v_size"))
-    lmScoredCounts(docBi, uni, biCnt)
+    lmScoredCounts(docBi, uni, biCnt, headV, headB)
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), (-log(p)).as("nll"))
       .groupBy("doc_id")

@@ -9,9 +9,10 @@ import org.apache.spark.sql.types._
   * type inference", load_duckdb.py:38). Never `inferSchema`: a two-pass
   * scan, and nondeterministic at scale.
   *
-  * Loads select columns in declared-schema order, replicating the
-  * reference's positional `INSERT INTO … SELECT *` contract
-  * (load_duckdb.py:76-95).
+  * The reference loads by position (`INSERT INTO … SELECT *`,
+  * load_duckdb.py:76-95), so a file whose header names or orders the
+  * columns differently from the DDL would load shifted values; [[read]]
+  * rejects such a file instead.
   */
 object SupplierCsv {
 
@@ -44,16 +45,16 @@ object SupplierCsv {
     "deliveries" -> deliveriesSchema)
 
   /** Read one table's CSV with its declared schema (header row, ISO
-    * dates — Spark's DateType default).
+    * dates — Spark's DateType default). `enforceSchema` off makes the
+    * scan check each file's header line against the DDL's names and
+    * order, failing with "CSV header does not conform to the schema".
     */
-  def read(spark: SparkSession, path: String, table: String): DataFrame = {
-    val schema = schemas(table)
+  def read(spark: SparkSession, path: String, table: String): DataFrame =
     spark.read
-      .schema(schema)
+      .schema(schemas(table))
       .option("header", true)
+      .option("enforceSchema", false)
       .csv(path)
-      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-  }
 
   /** Write a DataFrame as a CSV directory: one headered part file per
     * task, so the write and every later scan of the table run at the

@@ -62,11 +62,6 @@ object Tables {
       }
     })
 
-  /** Conf key gating [[widened]]: `auto` (default) widens only when the
-    * scan is under-partitioned; `never` guarantees no added shuffle.
-    */
-  val WidenConf = "spark.graft.widenUnderPartitionedScans"
-
   /** Widen an under-partitioned scan for map parallelism — gated, never
     * unconditional. The single-file test fixtures give parquet one scan
     * partition, so per-row kernels (minhash, simhash, shingles, vector
@@ -78,11 +73,9 @@ object Tables {
     * input).
     */
   def widened(df: DataFrame, key: Column): DataFrame = {
-    val conf = df.sparkSession.conf
-    val never = conf.get(WidenConf, "auto") == "never"
-    if (never || df.rdd.getNumPartitions >=
-        df.sparkSession.sparkContext.defaultParallelism) df
-    else if (conf.get(WidenPinConf, "true") == "true")
+    val parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= parallelism) df
+    else
       // pin the partition count: a bare repartition(key) is
       // REPARTITION_BY_COL, which AQE's partition coalescer is free to
       // collapse by BYTE size — measured r13: the q203 bigram kernel
@@ -90,15 +83,8 @@ object Tables {
       // one advisory partition. Widening exists precisely for CPU-bound
       // per-row kernels where cost tracks rows, not bytes, so the
       // explicit count (user-specified ⇒ AQE keeps it) is the intent.
-      // The gate above still skips already-parallel production scans.
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
-    else df.repartition(key)
+      df.repartition(parallelism, key)
   }
-
-  /** Conf gating the [[widened]] partition-count pin (default on);
-    * `false` restores the AQE-coalescible bare `repartition(key)`.
-    */
-  val WidenPinConf = "spark.graft.widenPinnedParallelism"
 
   def region(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "nation")

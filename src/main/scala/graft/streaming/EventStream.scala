@@ -67,6 +67,20 @@ object EventStream {
       .select(col("win.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
+  /** State partitions per stateful operator, fixed at first run by the
+    * checkpoint. Drains run on Spark's default state store, the
+    * HDFS-backed provider, at 2 partitions: the drained streams' state is
+    * model-scale (thousands of keys), and the r12 drain sweep
+    * (OPTIMIZATION_r12.md, stream state-partition re-sweep) measured
+    * HDFS at 1 and 2 partitions equal and fastest (q49 2.3 vs 2.2 s, q50
+    * 2.2 vs 2.1 s) and RocksDB 2–5× slower per drain at this volume,
+    * since each RocksDB instance pays its open and commit machinery
+    * whatever the state size. A stream whose state outgrows the
+    * heap sets `spark.sql.streaming.stateStore.providerClass` to RocksDB
+    * on its session.
+    */
+  val StatePartitions = 2
+
   /** Drain `df` into the `tableName` memory sink and block until done
     * (Trigger.AvailableNow — batch-equivalent semantics).
     *
@@ -77,53 +91,13 @@ object EventStream {
     * and a *reused* checkpoint would make the next drain resume past the
     * already-committed data and emit an empty table.
     */
-  /** State partitions per stateful operator. Fixed at first run by the
-    * checkpoint, so it is a per-stream sizing decision, not a session
-    * default: size it to the stream's state volume (each partition is a
-    * state-store instance paying per-micro-batch commit + maintenance
-    * I/O, so oversizing costs latency every batch forever). Overridable
-    * per session via [[StatePartitionsConf]] for streams whose state is
-    * known-small (the drained fixture runs) or known-huge. Default 4:
-    * the r12 drain sweep (OPTIMIZATION_r12.md) measured hdfs@8 →
-    * rocksdb@4 cutting every drain roughly in half on this host.
-    */
-  val StatePartitions = 4
-  val StatePartitionsConf = "spark.graft.streaming.statePartitions"
-
-  /** State-store provider for drains — RocksDB by default (changelog-
-    * style commits beat the HDFS provider's per-batch file snapshots in
-    * the r12 drain sweep, OPTIMIZATION_r12.md); override via
-    * [[StateProviderConf]].
-    */
-  val StateProviderConf = "spark.graft.streaming.stateStoreProvider"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** The small-state provider choice: for MODEL-scale state (the
-    * drained fixture runs — thousands of keys), the HDFS-backed
-    * provider at 1–2 partitions skips RocksDB's per-instance open +
-    * commit machinery and measured fastest in the r12 drain sweep
-    * (OPTIMIZATION_r12.md); RocksDB stays the default because
-    * production state is sized to NOT fit comfortably on-heap. The
-    * mains' `graft.Session` sets this provider. A caller that knows its
-    * state volume sets [[StateProviderConf]]/[[StatePartitionsConf]]
-    * accordingly (the per-stream sizing dial documented above).
-    */
-  val HdfsStateProvider =
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-  private val SparkProviderConf = "spark.sql.streaming.stateStore.providerClass"
-
   private[streaming] def drain(df: DataFrame, tableName: String,
       mode: OutputMode = OutputMode.Append): StreamingQuery = {
     val spark = df.sparkSession
-    val parts = spark.conf.get(StatePartitionsConf, StatePartitions.toString)
     val ckpt = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/dev/shm"), s"graft-ckpt-$tableName-")
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val provBefore = spark.conf.getOption(SparkProviderConf)
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    spark.conf.set(SparkProviderConf,
-      spark.conf.get(StateProviderConf, RocksDbProvider))
+    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     val q =
       try {
         val started = df.writeStream
@@ -137,8 +111,6 @@ object EventStream {
         started
       } finally {
         spark.conf.set("spark.sql.shuffle.partitions", before)
-        provBefore.fold(spark.conf.unset(SparkProviderConf))(
-          spark.conf.set(SparkProviderConf, _))
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
           .foreach(p => java.nio.file.Files.deleteIfExists(p))

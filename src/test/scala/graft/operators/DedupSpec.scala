@@ -478,11 +478,7 @@ class DedupSpec extends AnyFunSpec {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L),
         (20L, 21L), (21L, 22L), (5L, 20L)).toDF("doc_a", "doc_b")
       val local = Dedup.clustersOfVerified(edges).collect().toSeq
-      val dist =
-        try {
-          spark.conf.set(Dedup.CcLocalEdgeMaxConf, "0")
-          Dedup.clustersOfVerified(edges).collect().toSeq
-        } finally spark.conf.unset(Dedup.CcLocalEdgeMaxConf)
+      val dist = Dedup.clustersOfVerified(edges, localEdgeMax = 0L).collect().toSeq
       assert(local == dist, s"local=$local dist=$dist")
       assert(local.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
@@ -497,11 +493,7 @@ class DedupSpec extends AnyFunSpec {
       // log-round machinery must converge on its own
       val spokes = 2000L
       val edges = spark.range(1, spokes + 1).selectExpr("0L AS doc_a", "id AS doc_b")
-      val r =
-        try {
-          spark.conf.set(Dedup.CcLocalEdgeMaxConf, "0")
-          Dedup.clustersOfVerified(edges).collect()
-        } finally spark.conf.unset(Dedup.CcLocalEdgeMaxConf)
+      val r = Dedup.clustersOfVerified(edges, localEdgeMax = 0L).collect()
       assert(r.length == spokes + 1, s"star must resolve whole: ${r.length}")
       assert(r.forall(x => x.getLong(1) == 0L && x.getLong(2) == spokes + 1))
     }

@@ -46,13 +46,10 @@ class HammingSpec extends AnyFunSpec {
         if (d <= Dedup.HamRadius)
           brute(d) = brute.getOrElse(d, 0L) + 1
       }
-      spark.conf.set(Dedup.HamBitsConf, "60")
-      try {
-        val got = Dedup.hammingPairsFrom(planted).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        assert(got == brute.toMap)
-        assert(got.getOrElse(0, 0L) > 0L) // replicas still collide at 0
-      } finally spark.conf.unset(Dedup.HamBitsConf)
+      val got = Dedup.hammingPairsFrom(planted, bits = 60).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(got == brute.toMap)
+      assert(got.getOrElse(0, 0L) > 0L) // replicas still collide at 0
     }
 
     it("is partitioning-invariant") {

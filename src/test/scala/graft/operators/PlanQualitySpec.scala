@@ -648,6 +648,18 @@ class PlanQualitySpec extends AnyFunSpec {
       } finally spark.conf.set(auto, saved)
     }
 
+    it("rejects a domain-size hint that is not a non-negative item count, naming it") {
+      val key = "spark.graft.graph.domainSizeHint"
+      Seq("ten million", "-1").foreach { v =>
+        spark.conf.set(key, v)
+        val e =
+          try intercept[IllegalArgumentException](plan("q110_item_triangles"))
+          finally spark.conf.unset(key)
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+      }
+    }
+
     it("q143 scores against broadcast centroids — the corpus never sort-merge joins") {
       val p = plan("q143_label_agreement")
       assert(!p.contains("SortMergeJoin"),

@@ -313,12 +313,10 @@ class SupplierPerfSpec extends AnyFunSpec {
     }
 
     it("grid pruning returns exactly the single-cell brute skyline on the fixture") {
-      def withGrid(g: Int): Seq[String] = {
-        spark.conf.set("spark.graft.skyline.grid", g.toString)
-        try SupplierPerf.paretoSuppliers(spark, sf).collect()
-          .map(_.mkString("|")).toSeq
-        finally spark.conf.unset("spark.graft.skyline.grid")
-      }
+      def withGrid(g: Int): Seq[String] =
+        SupplierPerf.paretoFrom(Tables.supplier(spark, sf),
+          Tables.lineitem(spark, sf), Tables.orders(spark, sf), grid = g)
+          .collect().map(_.mkString("|")).toSeq
       // g=1 puts every point in one cell: phase 1 IS the brute-force
       // dominance filter; g=8 must reach the identical set through the
       // cell prune + candidate join

@@ -571,19 +571,13 @@ class TextAnalysisSpec extends AnyFunSpec {
       // head-resolved) — the scores must not move for q203 or q209
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq).toSeq
+      val docs = graft.sources.Tables.documents(spark, graft.TestSpark.Sf)
       val lmDefault = canon(TextAnalysis.bigramLm(spark, graft.TestSpark.Sf))
       val hoDefault = canon(TextAnalysis.heldoutPpl(spark, graft.TestSpark.Sf))
-      spark.conf.set(TextAnalysis.LmHeadVConf, "2")
-      spark.conf.set(TextAnalysis.LmHeadBConf, "1")
-      try {
-        assert(canon(TextAnalysis.bigramLm(spark, graft.TestSpark.Sf)) ==
-          lmDefault)
-        assert(canon(TextAnalysis.heldoutPpl(spark, graft.TestSpark.Sf)) ==
-          hoDefault)
-      } finally {
-        spark.conf.unset(TextAnalysis.LmHeadVConf)
-        spark.conf.unset(TextAnalysis.LmHeadBConf)
-      }
+      assert(canon(TextAnalysis.bigramLmFrom(docs, headV = 2, headB = 1)) ==
+        lmDefault)
+      assert(canon(TextAnalysis.heldoutPplFrom(docs, headV = 2, headB = 1)) ==
+        hoDefault)
     }
   }
 
@@ -598,12 +592,10 @@ class TextAnalysisSpec extends AnyFunSpec {
         "concat_ws(' ', transform(sequence(1, 30), i -> concat('t', " +
           "cast(exp(ln(50000.0d) * (pmod(xxhash64(id, i), 1000000) " +
           "/ 1000000.0d)) AS int)))) AS text")
-      val confs = Map(
-        TextAnalysis.LmHeadVConf -> "512", TextAnalysis.LmHeadBConf -> "4096",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try assert(TextAnalysis.bigramLmFrom(zipf).count() == 400L)
-      finally confs.keys.foreach(spark.conf.unset)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try assert(TextAnalysis.bigramLmFrom(zipf, headV = 512, headB = 4096)
+        .count() == 400L)
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

@@ -39,10 +39,23 @@ class SupplierCsvSpec extends AnyFunSpec {
       }
     }
 
-    it("selects columns in declared-schema order regardless of file order") {
-      for (data <- inputs) {
-        val s = SupplierCsv.read(spark, s"$data/suppliers.csv", "suppliers")
-        assert(s.columns.toSeq == SupplierCsv.suppliersSchema.fieldNames.toSeq)
+    it("rejects a header out of DDL order") {
+      // loaded by position, this file would read supplier_id = "Supplier 01"
+      val dir = java.nio.file.Files.createTempDirectory("graft-csv-header")
+      val f = dir.resolve("suppliers.csv")
+      try {
+        java.nio.file.Files.write(f, java.util.Arrays.asList(
+          "supplier_name,supplier_id,category,country,financial_risk_score",
+          "Supplier 01,S001,Electronics,DE,37"))
+        val e = intercept[Exception](
+          SupplierCsv.read(spark, f.toString, "suppliers").collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(_.contains("CSV header does not conform to the schema")),
+          msgs.mkString("\n"))
+      } finally {
+        java.nio.file.Files.deleteIfExists(f)
+        java.nio.file.Files.deleteIfExists(dir)
       }
     }
 
